@@ -37,9 +37,9 @@ TIER2_QUERIES = (
     "sim_kmeans_lattice",        # distributed Lloyd's, driver model state
     "sim_pq_topk",               # PQ/ADC over trained codebooks
     "sim_knn_kcore",             # 6-round peel + checkpointed edge set
-    "sim_graph_2hop_topk",       # kNN-graph family REUSING kcore's shared
-                                 # fit (r13) — pays ~1s, not a ~25-CPU-s
-                                 # refit; the pair shows the memo working
+    "sim_graph_2hop_topk",       # kNN-graph family: its own lattice fit +
+                                 # edge build, then the two-hop probe (no
+                                 # fit is shared with kcore)
     "events_lpa_communities",    # alternating bipartite sweeps
     "dedup_cluster_sizes",       # minhash LSH -> connected components
     "dedup_winnow_pairs",        # MOSS winnowing fingerprints

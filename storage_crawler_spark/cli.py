@@ -107,12 +107,15 @@ def _report_df(spark, args):
             "owner-usage": RU.gen_owner_usage,
         }[action]
         # crawled paths are BINARY (byte-faithful); the rollups are
-        # string ops, so decode with the lake's UTF-8 convention
+        # string ops, so read them as UTF-8 — a byte sequence that is not
+        # valid UTF-8 becomes U+FFFD instead of failing the report
         files = read_files(spark, args.lake, args.tag)
         if dict(files.dtypes).get("path") == "binary":
             from pyspark.sql import functions as F
 
-            files = files.withColumn("path", F.decode("path", "UTF-8"))
+            files = files.withColumn(
+                "path", F.make_valid_utf8(F.col("path").cast("string"))
+            )
         files.createOrReplaceTempView("files")
         return spark.sql(gen(SPARK))
     raise SystemExit(f"unknown action {args.action!r}")

@@ -613,103 +613,50 @@ def knn_edges_lattice(
     cell_target: int = KNN_CELL_TARGET,
 ):
     """Spark ENGINE path of :func:`gen_knn_edges`: distributed lattice
-    fit (k×dim driver model state — the k-means contract), assignment as
-    a map against literal BIGINT centroids, residual-sign cell
-    refinement, then the cell-local candidate join.  Bit-identical to the
-    unrolled oracle chain by construction (the ivf_lattice_topk parity
-    pattern).
+    fit (k×dim driver model state — the k-means contract), then one NumPy
+    stage for assignment + residual-sign cell refinement and one grouped
+    NumPy stage for the cell-local top-m.  Bit-identical to the unrolled
+    oracle chain by construction (the ivf_lattice_topk parity pattern).
 
-    Checkpoints twice: the (vec_id, qarr, cell, qn) cells relation (its
-    columns are computed through the fit and the candidate join reads it
-    as both sides), and the directed topm relation (the mutual INTERSECT
-    references it twice — without the checkpoint the candidate join runs
-    twice under CTE inlining).  Returns the symmetric (a, b) edge
-    DataFrame; callers checkpoint it if they reference it repeatedly.
+    Checkpoints the directed topm relation: the mutual INTERSECT
+    references it twice, and without the checkpoint the top-m stage runs
+    twice.  Returns the symmetric (a, b) edge DataFrame; callers
+    checkpoint it if they reference it repeatedly.
 
     Empty store: the fit cannot run (no init rows), and the true edge set
     is empty — return it without raising so the empty-input battery and
-    the oracle (whose unrolled chain yields zero rows) agree."""
+    the oracle (whose unrolled chain yields zero rows) agree.  Every other
+    fit error (model-state bound, ragged store) propagates."""
     from storage_crawler_spark.operators.kmeans import (
-        _km_lattice_sql,
+        EmptyVectorSetError,
         kmeans_fit_lattice,
     )
-    from storage_crawler_spark.plans.dialect import SPARK
-
-    from storage_crawler_spark.operators.kmeans import _uniform_lattice_dim
 
     try:
-        centroids, _ = kmeans_fit_lattice(spark, k, iters)
-    except ValueError:
+        centroids, _, v = kmeans_fit_lattice(spark, k, iters)
+    except EmptyVectorSetError:
         return spark.createDataFrame([], "a long, b long")
-    v = spark.table("_km_lat_v")  # checkpointed by the fit
     # adaptive cell ladder (oracle twin: _knn_pw_case over knc.n) — the
     # count reads the checkpointed lattice relation, one cheap job
     pw = _knn_pw_py(v.count(), k, cell_target, res_bits)
-    fast = _uniform_lattice_dim(v, len(centroids[0]))
-    if fast:
-        # r14 optimization: assignment + residual-sign cell + norm in ONE
-        # NumPy batch stage (bit-identical to the interpreted HOF chain —
-        # exact int64 distance/dot, np.sqrt == IEEE sqrt of the same
-        # double, argmin first-occurrence == lowest-cid tie-break)
-        g = _knn_cells_fast(v, centroids, res_bits, pw)
-    else:
-        arrs = [
-            "array(" + ", ".join(f"CAST({c} AS BIGINT)" for c in cent) + ")"
-            for cent in centroids
-        ]
-        dists = "array(" + ", ".join(
-            f"aggregate(zip_with(qarr, {a}, (u, v) -> (u - v) * (u - v)), "
-            f"CAST(0 AS BIGINT), (acc, x) -> acc + x)"
-            for a in arrs
-        ) + ")"
-        cents = "array(" + ", ".join(arrs) + ")"
-        sgn = _knn_res_sign(SPARK, "qarr", "carr", res_bits)
-        g = (
-            v.withColumn("__d", F.expr(dists))
-            .withColumn(
-                "cid",
-                (F.expr("array_position(__d, array_min(__d))") - 1).cast("long"),
-            )
-            .withColumn("carr", F.expr(f"element_at({cents}, CAST(cid + 1 AS INT))"))
-            .withColumn(
-                "cell",
-                F.expr(
-                    f"CAST(cid * {1 << max(res_bits, 0)} + ({sgn} % {pw}) AS BIGINT)"
-                ),
-            )
-            .withColumn(
-                "qn",
-                F.expr(
-                    "sqrt(CAST(aggregate(zip_with(qarr, qarr, (u, v) -> u * v), "
-                    "CAST(0 AS BIGINT), (acc, x) -> acc + x) AS DOUBLE))"
-                ),
-            )
-            .filter(F.col("qn") > 0)
-            .select("vec_id", "qarr", "cell", "qn")
-        )
-    g.localCheckpoint().createOrReplaceTempView("_knn_cells_g")
-    if fast:
-        # r14 optimization: the cell-local candidate join + per-src top-m
-        # window collapse into ONE grouped NumPy stage per cell — the
-        # exact int64 Gram matrix replaces an interpreted 64-element dot
-        # fold per candidate pair, and the separate PARTITION BY src
-        # window exchange disappears (a src's candidates all live in its
-        # own cell group).  simq replicates the SQL float chain op-for-op:
-        # double(dot) / (qn_a*qn_b) * KNN_Q, floor, int64.
-        topm = _knn_topm_fast(spark.table("_knn_cells_g"), m)
-    else:
-        topm = spark.sql(gen_knn_topm(SPARK, m=m, cells_rel="_knn_cells_g"))
-    topm.localCheckpoint().createOrReplaceTempView("_knn_topm")
-    return spark.sql(
-        "SELECT src AS a, dst AS b FROM _knn_topm "
-        "INTERSECT SELECT dst AS a, src AS b FROM _knn_topm"
+    # assignment + residual-sign cell + norm in ONE NumPy batch stage
+    # (bit-identical to the oracle's SQL chain — exact int64
+    # distance/dot, np.sqrt == IEEE sqrt of the same double, argmin
+    # first-occurrence == lowest-cid tie-break)
+    g = _knn_cells_fast(v, centroids, res_bits, pw)
+    # a src's candidates all live in its own cell, so the candidate scan
+    # and the per-src top-m run as ONE grouped NumPy stage per cell, with
+    # no window exchange (simq is op-for-op the SQL float chain)
+    topm = _knn_topm_fast(g, m).localCheckpoint()
+    return topm.select(F.col("src").alias("a"), F.col("dst").alias("b")).intersect(
+        topm.select(F.col("dst").alias("a"), F.col("src").alias("b"))
     )
 
 
 def _knn_cells_fast(v, centroids, res_bits: int, pw: int):
     """NumPy twin of the knn cell-assignment chain: (vec_id, qarr, cell,
     qn) per Arrow batch.  See :func:`knn_edges_lattice` for the exactness
-    argument; requires a dim-uniform store (caller-guarded)."""
+    argument; requires a dim-uniform store (checked by the fit)."""
     import numpy as np
     import pandas as pd
 

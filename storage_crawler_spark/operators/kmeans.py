@@ -24,8 +24,6 @@ An empty cluster keeps its previous centroid (standard Lloyd's fallback).
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -369,16 +367,6 @@ ORDER BY e.cid, e.dim
 """.strip()
 
 
-def _uniform_lattice_dim(v: DataFrame, dim: int) -> bool:
-    """True when every qarr in ``v`` has exactly ``dim`` elements — the
-    precondition of the NumPy assignment fast path (the SQL fold pads a
-    ragged zip_with with NULLs; the embeddings contract keeps stores
-    uniform, but the guard keeps a ragged store on the SQL path instead
-    of silently diverging).  One tiny job over the checkpointed relation."""
-    sizes = [r.d for r in v.select(F.size("qarr").alias("d")).distinct().collect()]
-    return sizes == [dim]
-
-
 def lattice_assign(v: DataFrame, centroids: list[list[int]], out_col: str = "cid") -> DataFrame:
     """``v`` + ``out_col``: nearest-centroid id by exact integer squared
     L2, computed per Arrow batch with NumPy int64 instead of the
@@ -388,9 +376,9 @@ def lattice_assign(v: DataFrame, centroids: list[list[int]], out_col: str = "cid
 
     Bit-identical to the SQL form: BIGINT arithmetic == int64 (documented
     bounds keep |coord| < 2^19, d² < 2^46), and ``np.argmin`` first
-    occurrence == the fold's lowest-cid tie-break.  Callers must ensure
-    every qarr has ``len(centroids[0])`` elements
-    (:func:`_uniform_lattice_dim`)."""
+    occurrence == the fold's lowest-cid tie-break.  Every qarr must have
+    ``len(centroids[0])`` elements — :func:`kmeans_fit_lattice` checks
+    this once on the relation it returns."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.types import LongType, StructField, StructType
@@ -459,86 +447,28 @@ def _lattice_assign_stats(v: DataFrame, centroids: list[list[int]]) -> DataFrame
     return v.select("qarr").mapInPandas(gen, "cid long, pos int, s long, n long")
 
 
-_KM_FIT_MEMO: dict = {}  # key -> (centroids, sizes, checkpointed v)
-_KM_FIT_MEMO_CAP = 8  # distinct (files, k, iters) keys per session stay tiny
-_KM_FIT_MEMO_LOCK = threading.Lock()
-
-
-def _km_fit_memo_key(spark, k: int, iters: int):
-    """Identity of a lattice fit's input: the parquet files behind the
-    ``embeddings`` view (plus application id and the fit hyperparameters).
-    Rewriting a store produces new part-file names, so path reuse with
-    different content yields a different key.
-
-    Memoization is accepted ONLY when the view is a BARE file scan (the
-    shape ``register_base_tables`` creates, i.e. every registry / bench /
-    sweep execution).  Anything else returns None and disables the memo
-    for that call: a non-file-backed fixture has no file identity, and a
-    DERIVED view (``limit``/``filter`` over the parquet) reports the SAME
-    ``inputFiles`` as the raw table while holding different rows — keying
-    on files alone would serve the wrong model.
-
-    Single-threaded-driver assumption (r15, ADVICE): the key is computed
-    BEFORE the fit reads the view, and the lock guards only the dict —
-    a concurrent ``createOrReplaceTempView('embeddings')`` between key
-    computation and the fit's scan could store a fit under the wrong
-    file-set key.  Every harness in this repo (registry builders, bench,
-    sweeps, tests) drives queries from one driver thread; a concurrent
-    deployment must re-derive the key after the fit and skip the store
-    on mismatch.  The memoized relation is a ``localCheckpoint`` —
-    lineage is truncated, so on a CLUSTER (executor loss, dynamic
-    allocation) a memo hit can hand out a relation over dangling blocks;
-    this memo is a LOCAL-MODE optimization and a cluster deployment
-    should use a reliable checkpoint directory instead."""
-    try:
-        plan = spark.table("embeddings")._jdf.queryExecution().analyzed()
-        for _ in range(4):  # unwrap alias/view wrappers only
-            if plan.getClass().getSimpleName() in ("SubqueryAlias", "View"):
-                plan = plan.child()
-            else:
-                break
-        if plan.getClass().getSimpleName() != "LogicalRelation":
-            return None
-        files = spark.table("embeddings").inputFiles()
-    except Exception:  # noqa: BLE001 — any failure means "don't memoize"
-        return None
-    if not files:
-        return None
-    return (spark.sparkContext.applicationId, k, iters, tuple(sorted(files)))
+class EmptyVectorSetError(ValueError):
+    """The lattice store holds no vectors, so there is nothing to fit."""
 
 
 def kmeans_fit_lattice(spark, k: int = KM_K, iters: int = KM_ITERS):
     """Spark ENGINE path of the lattice fit: the distributed Lloyd's loop
-    with exact-integer arithmetic — assignment is a map against literal
-    BIGINT centroid arrays, coordinate sums partial-combine (BIGINT sums
-    are order-free, unlike the float fit's avg), and the k×dim model
-    state collects to the driver per round (the k-means contract).
-    Bit-identical to :func:`kmeans_lattice_ctes`'s unrolled chain by
-    construction.  Returns (centroids: list[list[int]], sizes: dict).
+    with exact-integer arithmetic — assignment is the NumPy kernel of
+    :func:`lattice_assign` against the integer centroids, coordinate sums
+    partial-combine (BIGINT sums are order-free, unlike the float fit's
+    avg), and the k×dim model state collects to the driver per round (the
+    k-means contract).  Bit-identical to :func:`kmeans_lattice_ctes`'s
+    unrolled chain by construction.
 
-    r14 optimization (the ``_knn_edges_shared`` precedent, guide §2.4):
-    the fit is DETERMINISTIC in its input (init is ORDER BY vec_id LIMIT
-    k; every round aggregate is an order-free BIGINT sum; ties break by
-    lowest cid), so one (application, input files, k, iters) key is
-    memoized — sim_kmeans_lattice / sim_ivf_trained_topk / dedup_semantic
-    each used to re-pay the identical ~5 s wall / double-digit-CPU fit in
-    every session.  Small dict memo (the kNN family fits with iters=2 and
-    this family with iters=4, so a single slot would thrash); eviction
-    only drops the reference — no explicit unpersist, because a LIVE
-    consumer plan may still read the checkpointed blocks, and Spark's
-    ContextCleaner reclaims them once the last reference goes.  Session-
-    scoped only — the key carries the applicationId, so nothing persists
-    across bench/oracle invocations."""
+    Returns ``(centroids, sizes, v)``: the final centroids
+    (list[list[int]]), the cluster sizes they induce (dict), and ``v``,
+    the checkpointed (vec_id, label, qarr) lattice relation the fit ran
+    on — consumers assign against this handle.
+
+    Raises :class:`EmptyVectorSetError` on a store with no vectors, and
+    ``ValueError`` on a ragged store (vectors of different dimensions),
+    which the NumPy assignment cannot score."""
     from storage_crawler_spark.plans.dialect import SPARK
-
-    memo_key = _km_fit_memo_key(spark, k, iters)
-    if memo_key is not None:
-        with _KM_FIT_MEMO_LOCK:
-            hit = _KM_FIT_MEMO.get(memo_key)
-            if hit is not None:
-                centroids, sizes, ck = hit
-                ck.createOrReplaceTempView("_km_lat_v")
-                return [list(c) for c in centroids], dict(sizes)
 
     # repartition BEFORE the checkpoint: one parquet file would pin the
     # whole store in a single partition, single-threading every Lloyd's
@@ -559,112 +489,54 @@ def kmeans_fit_lattice(spark, k: int = KM_K, iters: int = KM_ITERS):
         )
         .localCheckpoint()
     )
-    v.createOrReplaceTempView("_km_lat_v")
     init = v.orderBy("vec_id").limit(k).select("qarr").collect()
     if not init:
-        raise ValueError("cannot fit k-means on an empty vector set")
+        raise EmptyVectorSetError("cannot fit k-means on an empty vector set")
+    dims = v.agg(F.min(F.size("qarr")), F.max(F.size("qarr"))).first()
+    if dims[0] != dims[1]:
+        raise ValueError(
+            f"kmeans_fit_lattice: ragged embedding store — vector dims "
+            f"range from {dims[0]} to {dims[1]}; the lattice fit needs "
+            f"one dimension"
+        )
     centroids = [list(r.qarr) for r in init]
     # bounded-model-state contract (r12): k x dim driver state per round
     check_model_state(
         k * len(centroids[0]), "kmeans_fit_lattice (k x dim centroids)"
     )
-    # r14 optimization: the per-round assignment is a NumPy int64 argmin
-    # per Arrow batch (bit-identical to the interpreted HOF fold — see
-    # lattice_assign) whenever the store is dim-uniform; a ragged store
-    # (impossible for real embeddings, guarded anyway) falls back to the
-    # original SQL expression.  The round's coordinate sums partial-
-    # combine inside the same Python stage (k×dim rows per batch cross
-    # the shuffle instead of n×dim posexploded rows).
-    fast = _uniform_lattice_dim(v, len(centroids[0]))
-    sizes: dict[int, int] = {}
+    # the per-round assignment is a NumPy int64 argmin per Arrow batch
+    # (bit-identical to the oracle's integer fold — see lattice_assign);
+    # the round's coordinate sums partial-combine inside the same Python
+    # stage (k×dim rows per batch cross the shuffle instead of n×dim
+    # posexploded rows).
     for _ in range(iters):
-        if fast:
-            stats = (
-                _lattice_assign_stats(v, centroids)
-                .groupBy("cid", "pos")
-                .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
-                .collect()
-            )
-        else:
-            arrs = [
-                "array(" + ", ".join(f"CAST({c} AS BIGINT)" for c in cent) + ")"
-                for cent in centroids
-            ]
-            dists = "array(" + ", ".join(
-                f"aggregate(zip_with(qarr, {a}, (u, v) -> (u - v) * (u - v)), "
-                f"CAST(0 AS BIGINT), (acc, x) -> acc + x)"
-                for a in arrs
-            ) + ")"
-            assigned = v.withColumn("__d", F.expr(dists)).withColumn(
-                "cid", (F.expr("array_position(__d, array_min(__d))") - 1).cast("long")
-            ).drop("__d")
-            stats = (
-                assigned.select("cid", F.posexplode("qarr").alias("pos", "val"))
-                .groupBy("cid", "pos")
-                .agg(F.sum("val").alias("s"), F.count(F.lit(1)).alias("n"))
-                .collect()
-            )
+        stats = (
+            _lattice_assign_stats(v, centroids)
+            .groupBy("cid", "pos")
+            .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
+            .collect()
+        )
         by_c: dict[int, dict[int, tuple[int, int]]] = {}
         for r in stats:
             by_c.setdefault(int(r.cid), {})[int(r.pos)] = (int(r.s), int(r.n))
         new = [list(c) for c in centroids]
-        sizes = {}
         for cid, poses in by_c.items():
             new[cid] = [
                 _km_sgn_div_py(poses[i][0], poses[i][1]) for i in range(len(poses))
             ]
-            sizes[cid] = poses[0][1]
         centroids = new
     # final sizes = the partition the TRAINED model induces (one more
     # distributed assignment count — mirrors the oracle chain's a_fin)
-    if fast:
-        fin = lattice_assign(v, centroids).groupBy("cid").count().collect()
-    else:
-        arrs = [
-            "array(" + ", ".join(f"CAST({c} AS BIGINT)" for c in cent) + ")"
-            for cent in centroids
-        ]
-        dists = "array(" + ", ".join(
-            f"aggregate(zip_with(qarr, {a}, (u, v) -> (u - v) * (u - v)), "
-            f"CAST(0 AS BIGINT), (acc, x) -> acc + x)"
-            for a in arrs
-        ) + ")"
-        fin = (
-            v.withColumn("__d", F.expr(dists))
-            .withColumn("cid", (F.expr("array_position(__d, array_min(__d))") - 1).cast("long"))
-            .groupBy("cid")
-            .count()
-            .collect()
-        )
+    fin = lattice_assign(v, centroids).groupBy("cid").count().collect()
     sizes = {int(r.cid): int(r["count"]) for r in fin}
-    if memo_key is not None:
-        with _KM_FIT_MEMO_LOCK:
-            # drop stale applications' entries, then cap (insertion order)
-            app = memo_key[0]
-            for kk in [x for x in _KM_FIT_MEMO if x[0] != app]:
-                del _KM_FIT_MEMO[kk]
-            # r15 (ADVICE): retain only the MOST RECENT fit per (k, iters)
-            # — a superseded input file-set's checkpointed relation would
-            # otherwise stay pinned in executor storage for the whole
-            # application; dropping the reference lets the ContextCleaner
-            # reclaim its blocks once no live plan reads them
-            for kk in [
-                x
-                for x in _KM_FIT_MEMO
-                if x[1:3] == memo_key[1:3] and x != memo_key
-            ]:
-                del _KM_FIT_MEMO[kk]
-            while len(_KM_FIT_MEMO) >= _KM_FIT_MEMO_CAP:
-                del _KM_FIT_MEMO[next(iter(_KM_FIT_MEMO))]
-            _KM_FIT_MEMO[memo_key] = ([list(c) for c in centroids], dict(sizes), v)
-    return centroids, sizes
+    return centroids, sizes, v
 
 
 def kmeans_lattice_artifact(spark, k: int = KM_K, iters: int = KM_ITERS) -> DataFrame:
     """Engine-path builder for the ``sim_kmeans_lattice`` entry: run the
     distributed lattice fit, then emit the same flat (cid, dim, c,
     n_assigned) relation the oracle chain produces."""
-    centroids, sizes = kmeans_fit_lattice(spark, k, iters)
+    centroids, sizes, _ = kmeans_fit_lattice(spark, k, iters)
     rows = [
         (cid, dim + 1, int(c), int(sizes.get(cid, 0)))
         for cid, cent in enumerate(centroids)
@@ -712,31 +584,12 @@ def ivf_lattice_topk(
     k: int = KM_K, iters: int = KM_ITERS,
 ) -> DataFrame:
     """Spark ENGINE path of :func:`gen_ivf_lattice_topk`: distributed
-    lattice fit (k×dim driver model state), assignment as a map against
-    literal BIGINT centroids, probe selection a driver-side argsort over k
+    lattice fit (k×dim driver model state), NumPy assignment against the
+    fit's integer centroids, probe selection a driver-side argsort over k
     integer scalars reaching the plan as a pushed ``cid IN (...)`` filter,
     integer-dot ranking fused into TakeOrderedAndProject."""
-    from storage_crawler_spark.plans.dialect import SPARK
-
-    centroids, _ = kmeans_fit_lattice(spark, k, iters)
-    v = spark.table("_km_lat_v")  # checkpointed by the fit
-    # r14 optimization: NumPy batch argmin replaces the interpreted HOF
-    # fold (bit-identical — see lattice_assign); ragged stores fall back
-    if _uniform_lattice_dim(v, len(centroids[0])):
-        assigned = lattice_assign(v, centroids)
-    else:
-        arrs = [
-            "array(" + ", ".join(f"CAST({c} AS BIGINT)" for c in cent) + ")"
-            for cent in centroids
-        ]
-        dists = "array(" + ", ".join(
-            f"aggregate(zip_with(qarr, {arr}, (u, v) -> (u - v) * (u - v)), "
-            f"CAST(0 AS BIGINT), (acc, x) -> acc + x)"
-            for arr in arrs
-        ) + ")"
-        assigned = v.withColumn("__d", F.expr(dists)).withColumn(
-            "cid", (F.expr("array_position(__d, array_min(__d))") - 1).cast("long")
-        ).drop("__d")
+    centroids, _, v = kmeans_fit_lattice(spark, k, iters)
+    assigned = lattice_assign(v, centroids)
     q_row = v.filter(F.col("vec_id") == query_vec_id).select("qarr").collect()
     if not q_row:
         raise ValueError(f"query_vec_id={query_vec_id} not found")
@@ -821,44 +674,25 @@ ORDER BY keep_id, drop_id
 def semantic_dedup(spark, sf_dir: str, k: int = KM_K, iters: int = KM_ITERS,
                    thr: int = SEM_T) -> DataFrame:
     """Spark ENGINE path of :func:`gen_semantic_dedup`: distributed lattice
-    fit (k×dim BIGINT driver state), assignment as a map against literal
-    centroids, then ONE shuffle on cid co-locating each cell for the
-    self-join; the d² fold and threshold run inside the join — no
-    candidate pair ever leaves its cell's partition.
+    fit (k×dim BIGINT driver state), NumPy assignment against the fit's
+    integer centroids, then ONE shuffle on cid co-locating each cell for
+    a per-cell NumPy pair scan; the d² and threshold run inside the cell
+    — no candidate pair ever leaves its cell's partition.
 
     Registers its own ``embeddings`` base table (like the sibling engine
     paths), so it is callable outside the registry builder."""
     from storage_crawler_spark.plans import views as V
-    from storage_crawler_spark.plans.dialect import SPARK
 
     V.register_base_tables(spark, sf_dir, ("embeddings",))
-    centroids, _ = kmeans_fit_lattice(spark, k, iters)
-    v = spark.table("_km_lat_v")  # checkpointed by the fit
-    # r14 optimization: NumPy batch argmin replaces the interpreted HOF
-    # fold (bit-identical — see lattice_assign); ragged stores fall back
-    fast = _uniform_lattice_dim(v, len(centroids[0]))
-    if fast:
-        assigned = lattice_assign(v, centroids)
-    else:
-        arrs = [
-            "array(" + ", ".join(f"CAST({c} AS BIGINT)" for c in cent) + ")"
-            for cent in centroids
-        ]
-        dists = "array(" + ", ".join(
-            f"aggregate(zip_with(qarr, {arr}, (u, v) -> (u - v) * (u - v)), "
-            f"CAST(0 AS BIGINT), (acc, x) -> acc + x)"
-            for arr in arrs
-        ) + ")"
-        assigned = v.withColumn("__d", F.expr(dists)).withColumn(
-            "cid", (F.expr("array_position(__d, array_min(__d))") - 1).cast("long")
-        ).drop("__d")
+    centroids, _, v = kmeans_fit_lattice(spark, k, iters)
+    assigned = lattice_assign(v, centroids)
     # r14 optimization: the cell-local pair scan runs as one NumPy stage
     # per cell (groupBy(cid).applyInPandas) — exact int64 d² via the
     # |a|²+|b|²−2a·b Gram identity instead of an interpreted 64-element
     # fold per candidate pair.  Values are bit-identical (all-integer);
     # NULL labels compare unequal in pandas (NaN != NaN) exactly like the
-    # oracle's CASE WHEN.  One shuffle on cid either way; no pair row
-    # ever leaves its cell's partition (the SemDeDup posture unchanged).
+    # oracle's CASE WHEN.  One shuffle on cid; no pair row ever leaves
+    # its cell's partition (the SemDeDup posture unchanged).
     import numpy as np
     import pandas as pd
 
@@ -897,42 +731,12 @@ def semantic_dedup(spark, sf_dir: str, k: int = KM_K, iters: int = KM_ITERS,
             }
         )
 
-    if fast:
-        return (
-            assigned.select("vec_id", "label", "qarr", "cid")
-            .groupBy("cid")
-            .applyInPandas(
-                _cell_pairs,
-                "keep_id long, drop_id long, cid long, d2 long, same_label long",
-            )
-            .orderBy("keep_id", "drop_id")
-        )
-    a = assigned.select(
-        F.col("vec_id").alias("keep_id"), F.col("label").alias("label_a"),
-        F.col("qarr").alias("qa"), "cid",
-    )
-    b = assigned.select(
-        F.col("vec_id").alias("drop_id"), F.col("label").alias("label_b"),
-        F.col("qarr").alias("qb"), F.col("cid").alias("cid_b"),
-    )
-    d2 = (
-        "aggregate(zip_with(qa, qb, (u, v) -> (u - v) * (u - v)), "
-        "CAST(0 AS BIGINT), (acc, x) -> acc + x)"
-    )
     return (
-        a.join(b, (F.col("cid") == F.col("cid_b")) & (F.col("keep_id") < F.col("drop_id")))
-        .withColumn("d2", F.expr(d2).cast("long"))
-        .filter(F.col("d2") <= thr)
-        .select(
-            "keep_id", "drop_id", "cid", "d2",
-            # CASE-WHEN semantics, not boolean-cast: the oracle's
-            # `CASE WHEN a.label = b.label THEN 1 ELSE 0` yields 0 when
-            # either label is NULL, while (a == b).cast('long') would
-            # yield NULL — the embeddings schema allows NULL labels.
-            F.when(F.col("label_a") == F.col("label_b"), F.lit(1))
-            .otherwise(F.lit(0))
-            .cast("long")
-            .alias("same_label"),
+        assigned.select("vec_id", "label", "qarr", "cid")
+        .groupBy("cid")
+        .applyInPandas(
+            _cell_pairs,
+            "keep_id long, drop_id long, cid long, d2 long, same_label long",
         )
         .orderBy("keep_id", "drop_id")
     )

@@ -23,7 +23,6 @@ Float-parity rules applied throughout (the driver hashes values):
 from __future__ import annotations
 
 import os
-import threading
 from dataclasses import dataclass, field
 from typing import Callable
 
@@ -113,48 +112,6 @@ def _checkpoint_view(df: DataFrame, name: str) -> DataFrame:
     ck = df.localCheckpoint()
     ck.createOrReplaceTempView(name)
     return ck
-
-
-# Shared mutual-kNN edge relation (r13, r12 verdict item 3): all four
-# graph entries (kcore / clustering_coeff / 2hop_topk / link_predict)
-# consume the SAME m=8 trained-cell edge set, but each builder used to
-# refit the lattice k-means and re-checkpoint cells/topm independently —
-# re-paying ~25-30 exec-CPU-s per entry at sf0.1 (BENCH_r12 tier2_cpu_s)
-# for bit-identical results (the whole chain is deterministic by the
-# engine-parity contract).  Memoized per (application, sf_dir): the first
-# graph entry pays the fit, the family reuses the checkpointed relation.
-# The memo key carries sf_dir because register_base_tables re-points the
-# embeddings view per call; a different application id means a fresh JVM
-# whose checkpoint blocks are gone.
-_KNN_EDGES_SHARED_KEY: list = [None, None]  # [key, checkpointed DataFrame]
-_KNN_EDGES_SHARED_LOCK = threading.Lock()
-
-
-def _knn_edges_shared(spark: SparkSession, sf_dir: str) -> str:
-    from storage_crawler_spark.operators.cluster import knn_edges_lattice
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    with _KNN_EDGES_SHARED_LOCK:
-        if _KNN_EDGES_SHARED_KEY[0] != key:
-            # Unpersist the previous checkpoint's storage blocks before
-            # re-checkpointing under a new key (r13 ADVICE: switching
-            # sf_dir within one session otherwise leaks the old blocks
-            # for the JVM lifetime).  Guarded: a stale handle from a
-            # stopped context must not abort the rebuild.
-            prev = _KNN_EDGES_SHARED_KEY[1]
-            if prev is not None and _KNN_EDGES_SHARED_KEY[0][0] == key[0]:
-                try:
-                    # DataFrame.unpersist() is a CacheManager no-op for a
-                    # localCheckpoint — the blocks belong to the LogicalRDD's
-                    # underlying RDD (probed on Spark 4.1.2; DF-level
-                    # unpersist left all partitions cached).
-                    prev._jdf.queryExecution().analyzed().rdd().unpersist(False)
-                except Exception:
-                    pass
-            ck = _checkpoint_view(knn_edges_lattice(spark, m=8), "_knn_edges_shared")
-            _KNN_EDGES_SHARED_KEY[0] = key
-            _KNN_EDGES_SHARED_KEY[1] = ck
-    return "_knn_edges_shared"
 
 
 def _sql_pair(gen: Callable[[Dialect], str], tables: tuple[str, ...]):
@@ -620,7 +577,7 @@ def _b_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     wn = fastpath.winnow_fp_rows(spark, src="_documents_rep")
     wn.createOrReplaceTempView("_winnow_rows")
     fk = spark.sql(dedup.gen_winnow_fk(SPARK, rows_rel="_winnow_rows"))
-    _checkpoint_view(fk, "_winnow_fk")
+    fk = _checkpoint_view(fk, "_winnow_fk")
     # r15 optimization (the r14 verdict's cap-BEFORE-the-boundary shape):
     # the fp-keyed pair SELF-join is replaced by one chunked Arrow stage
     # over the checkpointed (already df-capped) relation —
@@ -4807,10 +4764,9 @@ ORDER BY channel
         V.register_base_tables(spark, sf_dir, ("embeddings",))
         # the edge relation is referenced four times (degree, wedge x2,
         # triangle membership) from INSIDE the downstream WITH chain, so
-        # persist can't reach it — the shared checkpoint covers it (r13:
-        # one lattice fit for the whole graph family)
-        rel = _knn_edges_shared(spark, sf_dir)
-        return spark.sql(gen_knn_clustering_coeff(SPARK, edges_rel=rel))
+        # persist can't reach it — the checkpoint covers it
+        _checkpoint_view(cluster.knn_edges_lattice(spark, m=8), "_knn_edges_cc")
+        return spark.sql(gen_knn_clustering_coeff(SPARK, edges_rel="_knn_edges_cc"))
 
     from storage_crawler_spark.operators.cluster import (
         gen_knn_clustering_coeff as _gen_knn_cc,
@@ -4836,11 +4792,11 @@ ORDER BY channel
         )
 
         V.register_base_tables(spark, sf_dir, ("embeddings",))
-        # edge columns are computed through the cell join and the
-        # relation is referenced twice in the hop chain — the shared
-        # checkpoint covers it (r13: one lattice fit for the family)
-        rel = _knn_edges_shared(spark, sf_dir)
-        return spark.sql(gen_graph_2hop_topk(SPARK, edges_rel=rel))
+        # edge columns are computed through the cell stages and the
+        # relation is referenced twice in the hop chain — the checkpoint
+        # covers it
+        _checkpoint_view(cluster.knn_edges_lattice(spark, m=8), "_knn_edges_2hop")
+        return spark.sql(gen_graph_2hop_topk(SPARK, edges_rel="_knn_edges_2hop"))
 
     from storage_crawler_spark.operators.cluster import (
         gen_graph_2hop_topk as _gen_g2h,
@@ -4867,11 +4823,11 @@ ORDER BY channel
         )
 
         V.register_base_tables(spark, sf_dir, ("embeddings",))
-        # k-core pattern: edge columns computed through the cell join,
+        # k-core pattern: edge columns computed through the cell stages,
         # relation referenced four times (wedge join x2, anti-join,
-        # degrees); the shared checkpoint covers it (r13)
-        rel = _knn_edges_shared(spark, sf_dir)
-        return spark.sql(gen_knn_link_predict(SPARK, edges_rel=rel))
+        # degrees); the checkpoint covers it
+        _checkpoint_view(cluster.knn_edges_lattice(spark, m=8), "_knn_edges_lp")
+        return spark.sql(gen_knn_link_predict(SPARK, edges_rel="_knn_edges_lp"))
 
     from storage_crawler_spark.operators.cluster import (
         gen_knn_link_predict as _gen_lp,
@@ -5034,16 +4990,15 @@ ORDER BY channel
         )
 
         V.register_base_tables(spark, sf_dir, ("embeddings",))
-        # two checkpointed relations: the trained-cell edge set (shared
-        # across the graph family, r13 — the peel chain references it once
-        # but its columns are computed through the cell join), then the
-        # peeled edge set (the final projection reads it twice — degree
-        # rows + the 1-row convergence min — from INSIDE a WITH chain, so
-        # persist can't reach it); the checkpoint also truncates the
-        # 6-round peel lineage
-        rel = _knn_edges_shared(spark, sf_dir)
+        # two checkpointed relations: the trained-cell edge set (the peel
+        # chain references it once but its columns are computed through
+        # the cell stages), then the peeled edge set (the final projection
+        # reads it twice — degree rows + the 1-row convergence min — from
+        # INSIDE a WITH chain, so persist can't reach it); the checkpoint
+        # also truncates the 6-round peel lineage
+        _checkpoint_view(cluster.knn_edges_lattice(spark, m=8), "_knn_edges_kcore")
         _checkpoint_view(
-            spark.sql(gen_kcore_peeled(SPARK, edges_rel=rel)),
+            spark.sql(gen_kcore_peeled(SPARK, edges_rel="_knn_edges_kcore")),
             "_kcore_peeled",
         )
         return spark.sql(gen_knn_kcore(SPARK, peeled_rel="_kcore_peeled"))

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 
@@ -15,6 +16,8 @@ def crawled_lake(tmp_path_factory, spark):
     (tree / "sub").mkdir()
     (tree / "sub" / "a.txt").write_text("alpha")
     (tree / "b.tar.gz").write_bytes(b"beta")
+    # a file name that is not valid UTF-8 (crawled paths are raw bytes)
+    (tree / os.fsdecode(b"\xff.txt")).write_bytes(b"gamma")
     lake = tmp_path_factory.mktemp("lake")
     rc = main(["crawl", "--dir", str(tree), "--tag", "t", "--lake", str(lake)])
     assert rc == 0

@@ -309,18 +309,18 @@ def sf0001_views(spark):
     return spark
 
 
-def test_kmeans_lattice_guard_wired(sf0001_views, monkeypatch):
+@pytest.mark.parametrize(
+    "entry", ["sim_kmeans_lattice", "sim_knn_kcore", "sim_knn_link_predict"]
+)
+def test_kmeans_lattice_guard_wired(spark, sf_dir, monkeypatch, entry):
+    """The fit's guard reaches the caller of every entry built on it —
+    the kNN-graph entries must not turn it into an empty edge set."""
     from storage_crawler_spark.operators import kmeans
+    from storage_crawler_spark.plans import registry
 
     monkeypatch.setattr(kmeans, "check_model_state", _tiny_limit)
-    # the r14 fit memo returns an already-validated model WITHOUT re-running
-    # the guard; an earlier test in the session may have populated it for
-    # these exact (files, k, iters), so clear it to exercise a real fit
-    # (this was the one full-suite failure at the r14 snapshot HEAD — the
-    # memo landed after the round's pytest closeout)
-    kmeans._KM_FIT_MEMO.clear()
     with pytest.raises(ValueError, match="kmeans_fit_lattice"):
-        kmeans.kmeans_fit_lattice(sf0001_views)
+        registry.get_query(entry).builder(spark, sf_dir).collect()
 
 
 def test_pq_fit_guard_wired(sf0001_views, monkeypatch):

@@ -1,131 +1,11 @@
-"""Round-14 fixtures: the r13 ADVICE items, each pinned — the kNN-edge
-memo's unpersist-on-key-change (no storage-block leak when sf_dir
-switches within one session), the winnow defaults hoisted to shared
-constants, the minipg jar registered for executors, and the
-_DRIVER_WINDOW_R12 deletion (covered by test_registry_window's existing
-single-window contract)."""
+"""Round-14 fixtures: the r13 ADVICE items, each pinned — the winnow
+defaults hoisted to shared constants, the minipg jar registered for
+executors, and the _DRIVER_WINDOW_R12 deletion (covered by
+test_registry_window's existing single-window contract)."""
 
 from __future__ import annotations
 
 import pytest
-
-
-# ---------------------------------------------------------------------------
-# ADVICE: _knn_edges_shared must unpersist the superseded checkpoint's
-# storage blocks when the (applicationId, sf_dir) key changes, and the
-# memo must be lock-guarded.  DataFrame.unpersist() is NOT sufficient for
-# a localCheckpoint (probed: the blocks belong to the LogicalRDD's
-# underlying RDD), so the fix goes through analyzed().rdd().unpersist().
-# ---------------------------------------------------------------------------
-
-
-def _cached_rdd_ids(spark) -> set[str]:
-    sc = spark.sparkContext
-    return {
-        str(r.id())
-        for r in sc._jsc.sc().getRDDStorageInfo()
-        if r.numCachedPartitions() > 0
-    }
-
-
-def _checkpoint_rdd_id(df) -> str:
-    return str(df._jdf.queryExecution().analyzed().rdd().id())
-
-
-def _scrub_knn_memo(spark, memo_list):
-    """Restore the SHARED session to a consistent memo state after a test
-    that built fake `_knn_edges_shared` relations: monkeypatch puts the
-    ORIGINAL memo list back, but the catalog temp view its key attests to
-    was overwritten with fake-schema src/dst edges — a later memo HIT
-    would serve the fake view (the 4-failure suite-ordering break the r14
-    close-out attestation caught: kcore/2hop/coeff/link_predict resolving
-    `a`/`b` against the fake view).  Invalidate the key so the next
-    caller rebuilds view + checkpoint, and drop the corrupted view."""
-    prev = memo_list[1]
-    if prev is not None and not isinstance(prev, (list, tuple)):
-        try:
-            prev._jdf.queryExecution().analyzed().rdd().unpersist(False)
-        except Exception:
-            pass
-    memo_list[0] = None
-    memo_list[1] = None
-    try:
-        spark.catalog.dropTempView("_knn_edges_shared")
-    except Exception:
-        pass
-
-
-def test_knn_edges_memo_unpersists_superseded_checkpoint(spark, monkeypatch):
-    from storage_crawler_spark.plans import registry
-
-    # Stand-in edge relations: the real lattice fit is ~25 CPU-s; the memo
-    # logic under test is independent of what the relation holds.
-    def fake_edges(s, m=8):
-        return s.range(64).selectExpr("id AS src", "id + 1 AS dst")
-
-    import storage_crawler_spark.operators.cluster as cluster
-
-    monkeypatch.setattr(cluster, "knn_edges_lattice", fake_edges)
-    # Isolate from any memo state earlier tests left behind; afterwards
-    # scrub BOTH lists (patched + restored original) and the shared view,
-    # whatever the outcome — see _scrub_knn_memo.
-    orig_memo = registry._KNN_EDGES_SHARED_KEY
-    patched = [None, None]
-    monkeypatch.setattr(registry, "_KNN_EDGES_SHARED_KEY", patched)
-
-    try:
-        rel = registry._knn_edges_shared(spark, "/sf/dirA")
-        first = registry._KNN_EDGES_SHARED_KEY[1]
-        first_id = _checkpoint_rdd_id(first)
-        assert rel == "_knn_edges_shared"
-        assert first_id in _cached_rdd_ids(spark)
-
-        # Same key: memoized, no rebuild.
-        registry._knn_edges_shared(spark, "/sf/dirA")
-        assert registry._KNN_EDGES_SHARED_KEY[1] is first
-
-        # Key change within the same application: the old checkpoint's
-        # blocks must be gone and the new ones present.
-        registry._knn_edges_shared(spark, "/sf/dirB")
-        second = registry._KNN_EDGES_SHARED_KEY[1]
-        assert second is not first
-        cached = _cached_rdd_ids(spark)
-        assert first_id not in cached, "superseded checkpoint leaked its blocks"
-        assert _checkpoint_rdd_id(second) in cached
-    finally:
-        _scrub_knn_memo(spark, patched)
-        _scrub_knn_memo(spark, orig_memo)
-
-
-def test_knn_edges_memo_skips_unpersist_across_applications(spark, monkeypatch):
-    """A stale handle from a PREVIOUS application (fresh JVM) must not be
-    unpersisted — its blocks are already gone and the call could only
-    throw; the guard compares application ids before touching it."""
-    from storage_crawler_spark.plans import registry
-
-    def fake_edges(s, m=8):
-        return s.range(8).selectExpr("id AS src", "id + 1 AS dst")
-
-    import storage_crawler_spark.operators.cluster as cluster
-
-    monkeypatch.setattr(cluster, "knn_edges_lattice", fake_edges)
-
-    class Boom:
-        @property
-        def _jdf(self):  # pragma: no cover - must never be reached
-            raise AssertionError("unpersist attempted on a stale-app handle")
-
-    orig_memo = registry._KNN_EDGES_SHARED_KEY
-    patched = [("dead-app-id", "/sf/old"), Boom()]
-    monkeypatch.setattr(registry, "_KNN_EDGES_SHARED_KEY", patched)
-    try:
-        registry._knn_edges_shared(spark, "/sf/new")
-        ck = registry._KNN_EDGES_SHARED_KEY[1]
-        assert ck is not None and not isinstance(ck, Boom)
-    finally:
-        if not isinstance(patched[1], Boom):
-            _scrub_knn_memo(spark, patched)
-        _scrub_knn_memo(spark, orig_memo)
 
 
 # ---------------------------------------------------------------------------

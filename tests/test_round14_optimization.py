@@ -308,8 +308,7 @@ def test_knn_topm_fastpath_matches_sql(spark, sf_dir):
     from storage_crawler_spark.plans import views as V
 
     V.register_base_tables(spark, sf_dir, ("embeddings",))
-    centroids, _sizes = kmeans_fit_lattice(spark, k=4, iters=cluster.KNN_ITERS)
-    v = spark.table("_km_lat_v")
+    centroids, _sizes, v = kmeans_fit_lattice(spark, k=4, iters=cluster.KNN_ITERS)
     pw = cluster._knn_pw_py(v.count(), 4, cluster.KNN_CELL_TARGET, cluster.KNN_RES_BITS)
     g = cluster._knn_cells_fast(v, centroids, cluster.KNN_RES_BITS, pw)
     g.localCheckpoint().createOrReplaceTempView("_t14_cells")
@@ -328,8 +327,7 @@ def test_knn_cells_fast_matches_sql_chain(spark, sf_dir):
     from storage_crawler_spark.plans import views as V
 
     V.register_base_tables(spark, sf_dir, ("embeddings",))
-    centroids, _sizes = kmeans_fit_lattice(spark, k=4, iters=cluster.KNN_ITERS)
-    v = spark.table("_km_lat_v")
+    centroids, _sizes, v = kmeans_fit_lattice(spark, k=4, iters=cluster.KNN_ITERS)
     pw = cluster._knn_pw_py(v.count(), 4, cluster.KNN_CELL_TARGET, cluster.KNN_RES_BITS)
 
     arrs = [
@@ -732,48 +730,3 @@ LIMIT 40"""
     a = [tuple(r) for r in spark.sql(ref_sql).collect()]
     b = [tuple(r) for r in spark.sql(new_sql).collect()]
     assert a and a == b
-
-
-# -- kmeans fit memo ----------------------------------------------------
-
-
-def test_kmeans_fit_memo_reuses_and_isolates(spark, sf_dir):
-    """The per-(application, input files, k, iters) fit memo must return
-    bit-identical model state on a hit, keep distinct hyperparameter keys
-    alive side by side (the kNN family fits iters=2, this family iters=4 —
-    a single slot would thrash), survive caller mutation of the returned
-    lists, and skip memoization entirely for non-file-backed views."""
-    from storage_crawler_spark.operators import kmeans as KM
-    from storage_crawler_spark.plans import views as V
-
-    V.register_base_tables(spark, sf_dir, ("embeddings",))
-    KM._KM_FIT_MEMO.clear()
-    # r15 (ADVICE): the view mutation below must not leak a truncated
-    # 'embeddings' into later tests if any assertion here fails — restore
-    # the parquet-backed view and clear the memo on every exit path.
-    try:
-        c1, s1 = KM.kmeans_fit_lattice(spark)
-        assert len(KM._KM_FIT_MEMO) == 1
-        c2, s2 = KM.kmeans_fit_lattice(spark)
-        assert c2 == c1 and s2 == s1
-        c2[0][0] += 7  # caller mutation must not poison the memo
-        c3, _ = KM.kmeans_fit_lattice(spark)
-        assert c3 == c1
-        # a different iters count is a different key; both stay usable
-        c4, _ = KM.kmeans_fit_lattice(spark, iters=2)
-        assert len(KM._KM_FIT_MEMO) == 2
-        assert KM.kmeans_fit_lattice(spark)[0] == c1
-        assert KM.kmeans_fit_lattice(spark, iters=2)[0] == c4
-        # the checkpointed relation is re-registered on every hit
-        assert spark.table("_km_lat_v").count() > 0
-        # non-file-backed embeddings view: memo key is None -> no caching
-        df = spark.table("embeddings").limit(5)
-        df.createOrReplaceTempView("embeddings")
-        assert KM._km_fit_memo_key(spark, 8, 4) is None
-        n_before = len(KM._KM_FIT_MEMO)
-        KM.kmeans_fit_lattice(spark)
-        assert len(KM._KM_FIT_MEMO) == n_before
-    finally:
-        # restore the parquet-backed view for later tests in this session
-        V.register_base_tables(spark, sf_dir, ("embeddings",))
-        KM._KM_FIT_MEMO.clear()
