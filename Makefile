@@ -6,7 +6,7 @@
 PY ?= python
 SF ?= /root/testdata/sf0.01
 
-.PHONY: verify test sweep sweep-changed sweep-fingerprints bench plans
+.PHONY: verify test sweep sweep-changed sweep-fingerprints bench perfbench plans
 
 verify:
 	$(PY) -m pytest tests/test_compile_gate.py tests/test_registry_window.py -q
@@ -33,6 +33,14 @@ sweep-fingerprints:
 
 bench:
 	$(PY) bench.py
+
+# The repo benchmark (BENCHMARK.json): perfbench's own tests, then one
+# 10-second run of every workload, each printing its JSON result line.
+# Run it at two commits to A/B them.
+WORKLOADS ?= $(shell $(PY) -c "import json; print(' '.join(w['name'] for w in json.load(open('BENCHMARK.json'))['workloads']))")
+perfbench:
+	$(PY) -m pytest perfbench -q
+	for w in $(WORKLOADS); do $(PY) perfbench/run.py --workload $$w --seed 1 --seconds 10 || exit 1; done
 
 plans:
 	$(PY) tools/audit_plans.py

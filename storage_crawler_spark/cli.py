@@ -111,11 +111,9 @@ def _report_df(spark, args):
         # valid UTF-8 becomes U+FFFD instead of failing the report
         files = read_files(spark, args.lake, args.tag)
         if dict(files.dtypes).get("path") == "binary":
-            from pyspark.sql import functions as F
+            from storage_crawler_spark.functions.paths import path_str_col
 
-            files = files.withColumn(
-                "path", F.make_valid_utf8(F.col("path").cast("string"))
-            )
+            files = files.withColumn("path", path_str_col(files["path"]))
         files.createOrReplaceTempView("files")
         return spark.sql(gen(SPARK))
     raise SystemExit(f"unknown action {args.action!r}")

@@ -104,6 +104,7 @@ def crawl(spark: SparkSession, config: CrawlConfig) -> CrawlResult:
     # --- frontier loop -----------------------------------------------------
     # ``descend`` (is_dir AND not excluded) drives the frontier; the emitted
     # is_dir column stays the real lstat answer for excluded dirs too.
+    t_walk = _time.time()
     entries = stat_roots(spark, roots)
     frontier = entries.filter(F.col("descend")).select("path")
     levels = [entries.drop("descend")]
@@ -131,6 +132,7 @@ def crawl(spark: SparkSession, config: CrawlConfig) -> CrawlResult:
         frontier = level.filter(F.col("descend")).select("path")
         dir_total = frontier.count()
         depth += k
+    walk_sec = max(_time.time() - t_walk, 1e-9)
     status_log.append(("processed all dirs", None, "event"))
 
     all_entries = levels[0]
@@ -138,6 +140,7 @@ def crawl(spark: SparkSession, config: CrawlConfig) -> CrawlResult:
         all_entries = all_entries.unionByName(lv)
 
     # --- enrichment (extension, owner, mode bits, id, insert_time) --------
+    t_stat = _time.time()
     obs = Observation("crawl")
     enriched = (
         all_entries.withColumn("extension", extension_col(F.col("path"), config.extension_length))
@@ -174,6 +177,7 @@ def crawl(spark: SparkSession, config: CrawlConfig) -> CrawlResult:
 
     # Materialize once so counters are real and downstream reads are cheap.
     files = _materialize(spark, files, config, "files_stage")
+    stat_sec = max(_time.time() - t_stat, 1e-9)
     status_log.append(("processed all DB commits", None, "event"))
 
     elapsed = max(_time.time() - t0, 1e-9)
@@ -181,14 +185,16 @@ def crawl(spark: SparkSession, config: CrawlConfig) -> CrawlResult:
     file_count = int(got["file_count"] or 0)
     total_size = int(got["total_size"] or 0)
     dir_count = int(got["dir_count"] or 0)
-    # metric snapshot in the reference's vocabulary (storcrawl.py:494-521)
+    # metric snapshot in the reference's vocabulary (storcrawl.py:494-521);
+    # walk and stat rates over their own stage (storcrawl.py:503-505), the
+    # insert rate over the whole crawl until the sink has a timer of its own
     status_log.extend(
         [
             ("files stated", float(file_count), "files"),
             ("total files", float(file_count), "files"),
             ("file metadata inserts", float(file_count), "inserts"),
-            ("file stat rate", file_count / elapsed, "files/sec"),
-            ("file walk rate", file_count / elapsed, "entries/sec"),
+            ("file stat rate", file_count / stat_sec, "files/sec"),
+            ("file walk rate", file_count / walk_sec, "entries/sec"),
             ("insert rate", file_count / elapsed, "inserts/sec"),
         ]
     )
@@ -205,6 +211,8 @@ def crawl(spark: SparkSession, config: CrawlConfig) -> CrawlResult:
         "dirs": dir_count,
         "total_tb": total_size / 1024**4,
         "elapsed_sec": elapsed,
+        "walk_sec": walk_sec,
+        "stat_sec": stat_sec,
         "depth": depth,
     }
     return CrawlResult(files=files, status=status, summary=summary)

@@ -90,6 +90,12 @@ def pg_escape_col(raw: Column) -> Column:
     return pg_escape_udf(raw)
 
 
+def path_str_col(path: Column) -> Column:
+    """A BINARY path as a string for string operations: bytes that are not
+    UTF-8 become U+FFFD, where ``F.decode`` raises MALFORMED_CHARACTER_CODING."""
+    return F.make_valid_utf8(path.cast("string"))
+
+
 def mode_bits_col(st_mode_int: Column) -> Column:
     """st_mode → 19-char '0'/'1' string, the reference's bit(19) encoding
     ("{0:019b}".format(st_mode), storcrawl.py:361) — pure Catalyst expression,

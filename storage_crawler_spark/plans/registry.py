@@ -29,6 +29,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from storage_crawler_spark.functions.paths import path_str_col
 from storage_crawler_spark.operators import (
     analytics,
     cluster,
@@ -391,6 +392,29 @@ WHERE NOT EXISTS (
   WHERE o.o_custkey = c.c_custkey AND o.o_orderpriority = '1-URGENT'
 )
 """.strip()
+
+
+def _snapshot_diff_rows(old: DataFrame, new: DataFrame) -> DataFrame:
+    """``lake_snapshot_diff``'s projection of ``snapshot_diff``."""
+    from storage_crawler_spark.sources.lake import snapshot_diff
+
+    return snapshot_diff(old, new).select(
+        path_str_col(F.col("path")).alias("path_str"),
+        "status",
+        "old_size",
+        "new_size",
+        "size_delta",
+    )
+
+
+def _fsmeta_names(listing: DataFrame) -> DataFrame:
+    """``fsmeta_scan``'s projection: base name and size of each non-empty file."""
+    return (
+        listing.filter("NOT is_dir AND st_size > 0")
+        .select(F.element_at(F.split(path_str_col(F.col("path")), "/"), -1).alias("name"), "st_size")
+        .orderBy("name")
+    )
+
 
 # --------------------------------------------------------------------------
 # Dedup builders that materialize a shared intermediate once (Spark inlines
@@ -1752,8 +1776,6 @@ def _specs() -> list[QuerySpec]:
         every 3rd surviving file grown by 10 bytes) → snapshot_diff.  The
         oracle recomputes the same diff in closed form, so the full-outer
         join + churn classification is driver-checked end-to-end."""
-        from storage_crawler_spark.sources.lake import snapshot_diff
-
         V.register_base_tables(spark, sf_dir, ("documents",))
         base = spark.table("documents").select(
             F.encode(F.concat(F.lit("/corpus/doc_"), F.col("doc_id").cast("string")), "utf-8").alias("path"),
@@ -1774,13 +1796,7 @@ def _specs() -> list[QuerySpec]:
             )
             .drop("doc_id")
         )
-        return snapshot_diff(old, new).select(
-            F.decode("path", "utf-8").alias("path_str"),
-            "status",
-            "old_size",
-            "new_size",
-            "size_delta",
-        )
+        return _snapshot_diff_rows(old, new)
 
     def _b_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         from storage_crawler_spark.sources.lake import gen_compaction_plan
@@ -3411,8 +3427,6 @@ FROM files f
     )
 
     def _fsmeta_builder(spark, sf_dir):
-        from pyspark.sql import functions as F
-
         from storage_crawler_spark.sources.fsmeta import register_fsmeta
 
         register_fsmeta(spark)
@@ -3428,14 +3442,7 @@ FROM files f
             .option("partitions", "8")
             .load(_FSMETA_FIXTURE_DIR)
         )
-        return (
-            df.filter("NOT is_dir AND st_size > 0")
-            .select(
-                F.element_at(F.split(F.decode("path", "UTF-8"), "/"), -1).alias("name"),
-                F.col("st_size"),
-            )
-            .orderBy("name")
-        )
+        return _fsmeta_names(df)
 
     # The oracle reads the SAME live directory through DuckDB's own
     # filesystem functions (read_blob lists name + byte size) — so even the

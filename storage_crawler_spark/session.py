@@ -4,6 +4,15 @@ Local testing runs ``local[N]``; the same knob set is what we would ship on a
 1000-executor cluster: AQE for runtime re-planning (skew joins, coalesced
 shuffle partitions), Arrow for every Python<->JVM hop, and shuffle-partition
 counts sized to the data rather than Spark's static default of 200.
+
+On a local master the Python workers run under the engine's own daemon,
+``storage_crawler_spark.pyworker`` (``spark.python.daemon.module``): it takes
+the spark-core jar off the workers' ``sys.path`` and puts ``pyspark.zip``
+behind the installed pyspark, so Spark's per-task ``invalidate_caches()``
+no longer re-reads both archives (~0.2 s per Python task).  Workers import
+that module, like every UDF of the package, from
+``spark.executorEnv.PYTHONPATH``, which starts with the package's parent
+directory wherever the driver was started.
 """
 
 from __future__ import annotations
@@ -61,7 +70,17 @@ def build_session(
         builder = builder.config("spark.driver.extraClassPath", jar)
         if not (extra_conf or {}).get("spark.jars"):
             builder = builder.config("spark.jars", jar)
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
+    conf = dict(extra_conf or {})
+    # A cluster's executors may receive the package only per task
+    # (--py-files), after the daemon has started, so they keep Spark's own.
+    if (master or os.environ.get("SPARK_MASTER") or "local").startswith("local"):
+        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        caller = conf.get("spark.executorEnv.PYTHONPATH")
+        conf = {
+            "spark.python.daemon.module": "storage_crawler_spark.pyworker",
+            **conf,
+            "spark.executorEnv.PYTHONPATH": os.pathsep.join([root] + ([caller] if caller else [])),
+        }
+    for k, v in conf.items():
+        builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -98,6 +98,19 @@ def test_crawl_rows_and_semantics(spark, tree, tmp_path):
     assert "file stat rate" in status  # metric snapshot rows too
 
 
+def test_crawl_rates_use_their_own_stage_times(spark, tree):
+    """Walk rate over the level loop, stat rate over the enrichment stage
+    (storcrawl.py:503-505); insert rate over the whole crawl."""
+    res = crawl(spark, CrawlConfig(dirs=[str(tree)]))
+    s = res.summary
+    rates = {r.status: r.value for r in res.status.collect() if r.units and r.units.endswith("/sec")}
+    assert rates["file walk rate"] == pytest.approx(s["files"] / s["walk_sec"])
+    assert rates["file stat rate"] == pytest.approx(s["files"] / s["stat_sec"])
+    assert rates["insert rate"] == pytest.approx(s["files"] / s["elapsed_sec"])
+    assert rates["file walk rate"] != rates["file stat rate"]
+    assert s["walk_sec"] + s["stat_sec"] <= s["elapsed_sec"]
+
+
 def test_crawl_is_deterministic_rowset(spark, tree):
     cfg = CrawlConfig(dirs=[str(tree)])
     a = {bytes(r.path) for r in crawl(spark, cfg).files.collect()}

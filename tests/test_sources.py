@@ -424,3 +424,22 @@ def test_ingest_formats_round_trip_adversarial_text(spark, tmp_path):
     )
     for reader in (read_documents_jsonl, read_documents_csv, read_documents_orc):
         assert rows(fidelity_fingerprint(reader(spark, str(sf_dir)))) == fp_parquet, reader.__name__
+
+
+def test_registry_path_projections_read_non_utf8_paths(spark, tmp_path):
+    """lake_snapshot_diff and fsmeta_scan project BINARY paths to strings;
+    a non-UTF-8 byte becomes U+FFFD instead of failing the query."""
+    from storage_crawler_spark.plans.registry import _fsmeta_names, _snapshot_diff_rows
+    from storage_crawler_spark.sources.fsmeta import register_fsmeta
+
+    schema = "path BINARY, st_size LONG, st_mtime LONG"
+    old = spark.createDataFrame([(b"/t/\xff.bin", 1, 10)], schema)
+    new = spark.createDataFrame([(b"/t/\xff.bin", 2, 10)], schema)
+    rows = _snapshot_diff_rows(old, new).collect()
+    assert [(r.path_str, r.status, r.size_delta) for r in rows] == [("/t/�.bin", "changed", 1)]
+
+    with open(bytes(tmp_path) + b"/\xff.bin", "wb") as fh:
+        fh.write(b"abc")
+    register_fsmeta(spark)
+    listing = spark.read.format("fsmeta").load(str(tmp_path))
+    assert [tuple(r) for r in _fsmeta_names(listing).collect()] == [("�.bin", 3)]
