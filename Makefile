@@ -37,10 +37,11 @@ bench:
 # The repo benchmark (BENCHMARK.json): perfbench's own tests, then one
 # 10-second run of every workload, each printing its JSON result line.
 # Run it at two commits to A/B them.
-WORKLOADS ?= $(shell $(PY) -c "import json; print(' '.join(w['name'] for w in json.load(open('BENCHMARK.json'))['workloads']))")
 perfbench:
 	$(PY) -m pytest perfbench -q
-	for w in $(WORKLOADS); do $(PY) perfbench/run.py --workload $$w --seed 1 --seconds 10 || exit 1; done
+	for w in $$($(PY) -c "import json; print(' '.join(w['name'] for w in json.load(open('BENCHMARK.json'))['workloads']))"); do \
+		$(PY) perfbench/run.py --workload $$w --seed 1 --seconds 10 || exit 1; \
+	done
 
 plans:
 	$(PY) tools/audit_plans.py

@@ -187,7 +187,11 @@ def crawl(spark: SparkSession, config: CrawlConfig) -> CrawlResult:
     dir_count = int(got["dir_count"] or 0)
     # metric snapshot in the reference's vocabulary (storcrawl.py:494-521);
     # walk and stat rates over their own stage (storcrawl.py:503-505), the
-    # insert rate over the whole crawl until the sink has a timer of its own
+    # insert rate over the whole crawl until the sink has a timer of its own.
+    # The lstat calls run inside the walk (the fused scandir walker; the roots
+    # are stat'ed on the driver by stat_roots), so "file stat rate" measures
+    # the enrichment stage (extension, owner, mode bits, files_stage
+    # materialize) that stands where the reference's stater pool does.
     status_log.extend(
         [
             ("files stated", float(file_count), "files"),

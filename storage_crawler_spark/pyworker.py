@@ -40,12 +40,16 @@ def purge_importers(cache: dict, archives: list[str]) -> None:
             del cache[key]
 
 
-if __name__ == "__main__":
-    sys.path[:], _archives = worker_path(sys.path)
-    purge_importers(sys.path_importer_cache, _archives)
-
+def import_daemon():
+    """Rewrite ``sys.path`` with ``worker_path``, import ``pyspark.daemon``,
+    then take the archives off ``sys.path`` and purge their importers."""
+    sys.path[:], archives = worker_path(sys.path)
     from pyspark import daemon
 
-    sys.path[:] = [p for p in sys.path if p not in _archives]
-    purge_importers(sys.path_importer_cache, _archives)
-    daemon.manager()
+    sys.path[:] = [p for p in sys.path if p not in archives]
+    purge_importers(sys.path_importer_cache, archives)
+    return daemon
+
+
+if __name__ == "__main__":
+    import_daemon().manager()

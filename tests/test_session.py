@@ -50,24 +50,28 @@ def test_purge_importers_drops_archive_and_package_keys():
 
 
 def test_pyspark_only_in_the_zip_still_imports(tmp_path):
-    """Without an installed pyspark (``-S``: no site-packages) the zip,
-    moved to the end of the path, still provides it."""
+    """Without an installed pyspark (``-S``: no site-packages) the daemon's
+    own start-up steps import pyspark from the zip, and a submodule first
+    imported after the zip has left ``sys.path`` still resolves."""
     archive = tmp_path / "pyspark.zip"
     with zipfile.ZipFile(archive, "w") as z:
         z.writestr("pyspark/__init__.py", "FROM = 'zip'\n")
+        z.writestr("pyspark/daemon.py", "def manager():\n    pass\n")
+        z.writestr("pyspark/later.py", "")
     (tmp_path / "core.jar").write_bytes(b"")
     code = (
         "import sys\n"
-        "from storage_crawler_spark.pyworker import purge_importers, worker_path\n"
-        "sys.path[:], a = worker_path(sys.path)\n"
-        "purge_importers(sys.path_importer_cache, a)\n"
-        "import pyspark\n"
-        "print(pyspark.FROM, pyspark.__file__, any(p.endswith('.jar') for p in sys.path))\n"
+        "from storage_crawler_spark.pyworker import import_daemon\n"
+        "daemon = import_daemon()\n"
+        "import pyspark, pyspark.later\n"
+        "print(pyspark.FROM, daemon.__file__, pyspark.later.__file__,\n"
+        "      [p for p in sys.path if p.endswith(('.jar', 'pyspark.zip'))])\n"
     )
     env = {**os.environ, "PYTHONPATH": os.pathsep.join([str(archive), str(tmp_path / "core.jar"), ROOT])}
     out = subprocess.run([sys.executable, "-S", "-c", code], env=env, cwd=str(tmp_path),
                          capture_output=True, text=True, check=True).stdout.split()
-    assert out == ["zip", str(archive / "pyspark" / "__init__.py"), "False"]
+    assert out == ["zip", str(archive / "pyspark" / "daemon.py"),
+                   str(archive / "pyspark" / "later.py"), "[]"]
 
 
 # The driver of a fresh session, started outside the checkout with no
