@@ -34,10 +34,6 @@ _SCALAR_KEYS = {
     "owners": ("owners", str),
     "extension_length": ("extension_length", int),
     "walkers": ("walkers", int),
-    "staters": ("staters", int),
-    "injects": ("injects", int),
-    "update": ("update_interval", float),
-    "timeout": ("commit_timeout", float),
 }
 
 
@@ -50,7 +46,8 @@ def _split_list(value: str) -> list[str]:
 
 def parse_rc(text: str) -> dict[str, object]:
     """Parse one rc file's text into {field: value} (unknown keys ignored —
-    the reference's db* and log* options have no analog here)."""
+    the reference's db*, log*, staters, injects, update and timeout options
+    have no analog here)."""
     out: dict[str, object] = {}
     for raw in text.splitlines():
         line = raw.strip()
@@ -99,10 +96,6 @@ class CrawlConfig:
     exclude: list[str] = field(default_factory=lambda: [".snapshot"])
     extension_length: int = 6  # storcrawl.py:27
     walkers: int = 4  # storcrawl.py:41
-    staters: int = 4
-    injects: int = 4
-    update_interval: float = 60.0  # storcrawl.py:45
-    commit_timeout: float = 60.0  # storcrawl.py:46
     # Loop safety bound against pathological nesting (bind-mount loops;
     # symlinks are never followed).  Raised from 512 in r14: deep-chain
     # frontiers batch ~deep_batch_levels levels per Spark job, so even the
@@ -152,14 +145,6 @@ class CrawlConfig:
             cfg.owners = env["STORCRAWL_OWNERS"]
         if "STORCRAWL_WALKERS" in env:
             cfg.walkers = int(env["STORCRAWL_WALKERS"])
-        if "STORCRAWL_STATERS" in env:
-            cfg.staters = int(env["STORCRAWL_STATERS"])
-        if "STORCRAWL_INJECTS" in env:
-            cfg.injects = int(env["STORCRAWL_INJECTS"])
-        if "STORCRAWL_UPDATE" in env:
-            cfg.update_interval = float(env["STORCRAWL_UPDATE"])
-        if "STORCRAWL_TIMEOUT" in env:
-            cfg.commit_timeout = float(env["STORCRAWL_TIMEOUT"])
         if "STORCRAWL_LEVEL_STORE" in env:
             cfg.level_store = env["STORCRAWL_LEVEL_STORE"]
         if "STORCRAWL_LOGFILE" in env:

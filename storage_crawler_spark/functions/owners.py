@@ -144,9 +144,14 @@ def owner_join(files: DataFrame, owners_dim: DataFrame, path_col: str = "path") 
     with indeterminate row order (e.g. a repartition of a non-ordered
     relation), a task retry can re-key rows mid-aggregation.  Safe for the
     parquet-scan callers in this repo; pass a deterministic plan (scan,
-    filtered scan, or a sorted relation) or pre-materialize otherwise."""
+    filtered scan, or a sorted relation) or pre-materialize otherwise.
+
+    Paths are raw bytes and need not be UTF-8.  The ancestors are cut at
+    the path's ``/`` bytes: ISO-8859-1 maps every byte to one character
+    and back, so splitting the Latin-1 string at ``/`` and re-encoding
+    yields the exact byte prefixes the dim is matched against."""
     decoded = files.withColumn("__row_id", F.monotonically_increasing_id()).withColumn(
-        "__path_str", F.decode(F.col(path_col), "UTF-8")
+        "__path_str", F.decode(F.col(path_col), "ISO-8859-1")
     )
     with_ancestors = decoded.withColumn(
         "__anc",
@@ -162,7 +167,7 @@ def owner_join(files: DataFrame, owners_dim: DataFrame, path_col: str = "path") 
                 """
             )
         ),
-    ).withColumn("__anc_bytes", F.encode("__anc", "UTF-8"))
+    ).withColumn("__anc_bytes", F.encode("__anc", "ISO-8859-1"))
     joined = with_ancestors.join(
         F.broadcast(owners_dim.withColumnRenamed("dir", "__dir")),
         F.col("__anc_bytes") == F.col("__dir"),

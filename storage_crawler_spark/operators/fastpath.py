@@ -8,6 +8,11 @@ form row-for-row (tests/test_round14_optimization.py) and by the DuckDB
 oracle gate on every consuming entry.  The SQL generators stay the oracle
 formulation; these are Spark ENGINE paths only.
 
+Input contract: engine twins take and return DataFrames (the caller owns
+registration, partitioning and materialization of its inputs); only the
+SQL generators in the dialect modules take relation names.  :func:`spread`
+is the one input-partitioning policy the builders apply before a twin.
+
 Why this is the right boundary (guide §4.1/§4.2): Catalyst INTERPRETS
 higher-order array lambdas per element (measured r11: ~6 µs/element for
 ``aggregate(zip_with(...))`` folds), and per-position ``md5`` over a
@@ -41,7 +46,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 from storage_crawler_spark.operators.dedup import MINHASH_P, MINHASH_PERMS
 
@@ -49,6 +54,30 @@ WINNOW_OUT_SCHEMA = "doc_id bigint, n_grams int, fps array<bigint>"
 MINHASH_OUT_SCHEMA = "doc_id bigint, " + ", ".join(
     f"m{i} bigint" for i in range(len(MINHASH_PERMS))
 )
+
+
+def spread(df: DataFrame) -> DataFrame:
+    """Round-robin ``df`` over ``defaultParallelism`` partitions.  The
+    documents source may be ONE parquet file (one scan partition), and a
+    Python map stage inherits its input's partitioning, so without this
+    the whole twin runs as a single task however many cores exist.
+    Values never depend on it: every twin is per-row or order-free."""
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+
+
+# NumPy/Arrow batch stages want thousands of rows per task before the
+# per-task Arrow setup amortizes; below that, extra tasks are pure
+# scheduling + serialization overhead (guide §2.2 "fewer, larger tasks").
+LATTICE_ROWS_PER_TASK = 4096
+
+
+def lattice_parts(spark, n_rows: int) -> int:
+    """Scale-adaptive partition count for the lattice relations: enough
+    partitions to keep every core busy on a big store (ceiling =
+    defaultParallelism), but never more than one task per
+    ``LATTICE_ROWS_PER_TASK`` rows on a small one."""
+    want = -(-int(n_rows) // LATTICE_ROWS_PER_TASK) if n_rows > 0 else 1
+    return max(1, min(spark.sparkContext.defaultParallelism, want))
 
 
 def _md5_48(data: bytes) -> int:
@@ -97,16 +126,16 @@ def _winnow_batches(k: int, w: int):
     return gen
 
 
-def winnow_rel(spark: SparkSession, src: str = "documents", k: int = 8, w: int = 4) -> DataFrame:
+def winnow_rel(docs: DataFrame, k: int = 8, w: int = 4) -> DataFrame:
     """Engine twin of :func:`text.gen_winnow_rel`: (doc_id, n_grams, fps)
     winnowed-fingerprint relation, computed per Arrow batch (one md5 per
     k-gram in hashlib + one NumPy sliding-window min) instead of per
     interpreted SQL lambda element.  Values and schema are bit-identical
     to the SQL form (parity-tested); the WHERE stays in SQL so the filter
     pushes into the parquet scan."""
-    base = spark.table(src).where(
-        f"text IS NOT NULL AND length(text) >= {k + w - 1}"
-    ).select("doc_id", "text")
+    base = docs.where(f"text IS NOT NULL AND length(text) >= {k + w - 1}").select(
+        "doc_id", "text"
+    )
     return base.mapInPandas(_winnow_batches(k, w), WINNOW_OUT_SCHEMA)
 
 
@@ -198,7 +227,7 @@ def _jaccard_prep_batches():
     return gen
 
 
-def jaccard_prep(spark: SparkSession, src: str = "documents") -> DataFrame:
+def jaccard_prep(docs: DataFrame) -> DataFrame:
     """Engine twin of :func:`dedup.gen_jaccard_prep`: per-document hashed
     distinct token set + set size.  The token hash is ENGINE-LOCAL by the
     documented token_hash64 contract (only intersection CARDINALITIES
@@ -212,7 +241,7 @@ def jaccard_prep(spark: SparkSession, src: str = "documents") -> DataFrame:
     JACCARD_PREF_THETA prefix for the pair join's arrays_overlap
     pre-filter (exact pruning — see the lemma note above; consumers that
     cannot use it simply ignore the column)."""
-    base = spark.table(src).select("doc_id", "lang", "n_chars", "text")
+    base = docs.select("doc_id", "lang", "n_chars", "text")
     return base.mapInPandas(
         _jaccard_prep_batches(),
         "doc_id bigint, lang string, n_chars bigint, hs array<bigint>, "
@@ -240,9 +269,7 @@ def _winnow_rows_batches(k: int, w: int):
     return gen
 
 
-def winnow_fp_rows(
-    spark: SparkSession, src: str = "documents", k: int = 8, w: int = 4
-) -> DataFrame:
+def winnow_fp_rows(docs: DataFrame, k: int = 8, w: int = 4) -> DataFrame:
     """Exploded (doc_id, fp) winnow rows, flattened INSIDE the Python
     stage — the pair builder's shape.  Equivalent to exploding
     :func:`winnow_rel`'s fps array, but no array column ever exists:
@@ -250,15 +277,14 @@ def winnow_fp_rows(
     VIEW boxes every element per reference (the fk relation reads the
     winnow relation twice), which profiling showed dominating the
     dedup_winnow_pairs CPU after the hash fast path landed."""
-    base = spark.table(src).where(
-        f"text IS NOT NULL AND length(text) >= {k + w - 1}"
-    ).select("doc_id", "text")
+    base = docs.where(f"text IS NOT NULL AND length(text) >= {k + w - 1}").select(
+        "doc_id", "text"
+    )
     return base.mapInPandas(_winnow_rows_batches(k, w), "doc_id bigint, fp bigint")
 
 
 def jaccard_pairs_blocked(
-    spark: SparkSession,
-    ranked_rel: str,
+    ranked: DataFrame,
     threshold: float = 0.5,
     length_window: int = 60,
     block_cap: int = 512,
@@ -305,8 +331,7 @@ def jaccard_pairs_blocked(
     win = int(length_window)
 
     base = (
-        spark.table(ranked_rel)
-        .where(
+        ranked.where(
             "hs IS NOT NULL AND n_toks IS NOT NULL AND n_chars IS NOT NULL "
             "AND lang IS NOT NULL"
         )
@@ -403,9 +428,7 @@ def jaccard_pairs_blocked(
     )
 
 
-def winnow_pair_partials(
-    spark: SparkSession, fk_rel: str, n_chunks: int
-) -> DataFrame:
+def winnow_pair_partials(fk: DataFrame, n_chunks: int | None = None) -> DataFrame:
     """Pre-combined (doc_a, doc_b, cnt) pair partials over the df-capped
     winnow fingerprint relation — the Arrow replacement of the fp-keyed
     pair SELF-join's candidate generation (r15; the r14 verdict's
@@ -427,10 +450,17 @@ def winnow_pair_partials(
     is exactly {unordered doc pairs within one fp group}; every fp lives
     in exactly one chunk, so each such pair is generated exactly once per
     shared fp; summing cnt over chunks is count(*) over the join.  Sorted
-    doc_ids within a group make doc_a < doc_b structural."""
+    doc_ids within a group make doc_a < doc_b structural.
+
+    ``n_chunks`` defaults to the scale-adaptive count: one chunk per ~8k
+    kept rows, at least the core count.  That runs a count job over
+    ``fk``, which is cheap when ``fk`` is checkpointed, as the builder's
+    is; the chunk count never changes the result."""
     from pyspark.sql import functions as F
 
-    rows = spark.table(fk_rel).select(
+    if n_chunks is None:
+        n_chunks = max(fk.sparkSession.sparkContext.defaultParallelism, fk.count() // 8192 + 1)
+    rows = fk.select(
         "doc_id", "fp", F.pmod("fp", F.lit(int(n_chunks))).alias("g")
     )
 
@@ -525,7 +555,7 @@ def _containment_batches():
     return gen
 
 
-def containment_prep(spark: SparkSession, src: str = "documents") -> DataFrame:
+def containment_prep(docs: DataFrame) -> DataFrame:
     """Shared base of the containment-pair entry: (doc_id, shingles,
     hs, n_sh) in ONE Python pass per document — the SQL form computed the
     tokenize+3-shingle map TWICE (once for the exploded string relation,
@@ -533,21 +563,20 @@ def containment_prep(spark: SparkSession, src: str = "documents") -> DataFrame:
     Shingle strings replicate ``_shingles`` exactly; the hash is the
     engine-local md5-48 (the oracle's own construction — containment
     output depends only on intersection cardinalities)."""
-    base = spark.table(src).select("doc_id", "text")
+    base = docs.select("doc_id", "text")
     return base.mapInPandas(
         _containment_batches(),
         "doc_id bigint, shingles array<string>, hs array<bigint>, n_sh int",
     )
 
 
-def minhash_sigs(spark: SparkSession, src: str = "documents") -> DataFrame:
+def minhash_sigs(docs: DataFrame) -> DataFrame:
     """Engine twin of :func:`dedup.gen_minhash_sigs`: per-document minhash
     signature (m0..m15 BIGINT) via hashlib md5 over distinct 3-shingles +
     one vectorized (a·h+b) mod P min per permutation.  Bit-identical to
     the SQL form (parity-tested; hash values CROSS the output, so the md5
     construction is mandatory and replicated exactly)."""
-    base = spark.table(src).select("doc_id", "text")
-    return base.mapInPandas(_minhash_batches(), MINHASH_OUT_SCHEMA)
+    return docs.select("doc_id", "text").mapInPandas(_minhash_batches(), MINHASH_OUT_SCHEMA)
 
 
 def _source_gram_batches(n: int):
@@ -577,9 +606,7 @@ def _source_gram_batches(n: int):
     return gen
 
 
-def source_gram_rows(
-    spark: SparkSession, src: str = "documents", n: int = 5
-) -> DataFrame:
+def source_gram_rows(docs: DataFrame, n: int = 5) -> DataFrame:
     """One (source, ngram) row per (document, DISTINCT token n-gram) —
     the projection of ``SELECT DISTINCT doc_id, source, ngram`` over
     :func:`text.gen_token_ngrams` (passthrough source, NULL sources
@@ -593,11 +620,7 @@ def source_gram_rows(
     is ``array_join(slice(toks, gi+1, n), ' ')`` == ``' '.join(...)``;
     docs with fewer than ``n`` tokens (including NULL text: size -1)
     produce nothing in both forms."""
-    base = (
-        spark.table(src)
-        .where("text IS NOT NULL AND source IS NOT NULL")
-        .select("source", "text")
-    )
+    base = docs.where("text IS NOT NULL AND source IS NOT NULL").select("source", "text")
     return base.mapInPandas(_source_gram_batches(n), "source string, ngram string")
 
 
@@ -648,7 +671,7 @@ def _phash_batches():
     return gen
 
 
-def phash_rel(spark: SparkSession, src: str = "documents") -> DataFrame:
+def phash_rel(docs: DataFrame) -> DataFrame:
     """Engine twin of :func:`multimodal.gen_phash` (before the final ORDER
     BY): (doc_id, phash, n_bits_set) via one exact-int64 NumPy separable
     DCT per Arrow batch instead of the interpreted 2x512-multiply SQL
@@ -659,9 +682,7 @@ def phash_rel(spark: SparkSession, src: str = "documents") -> DataFrame:
     The WHERE stays in SQL so the NOT NULL filter reaches the parquet
     scan; ``octet_length(encode(text,'utf-8')) >= 64`` replicates the SQL
     form's byte-length guard exactly."""
-    base = (
-        spark.table(src)
-        .where("text IS NOT NULL AND octet_length(encode(text, 'utf-8')) >= 64")
-        .select("doc_id", "text")
-    )
+    base = docs.where(
+        "text IS NOT NULL AND octet_length(encode(text, 'utf-8')) >= 64"
+    ).select("doc_id", "text")
     return base.mapInPandas(_phash_batches(), PHASH_OUT_SCHEMA)

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from storage_crawler_spark.operators import check_model_state
+from storage_crawler_spark.operators.fastpath import lattice_parts
 
 
 def _dist2_expr(centroid: list[float]) -> str:
@@ -219,21 +220,6 @@ def ivf_trained_topk(spark, sf_dir: str, query_vec_id: int = 0, k_neighbours: in
 KM_Q = 65536
 KM_K = 8
 KM_ITERS = 4
-
-
-# NumPy/Arrow batch stages want thousands of rows per task before the
-# per-task Arrow setup amortizes; below that, extra tasks are pure
-# scheduling + serialization overhead (guide §2.2 "fewer, larger tasks").
-_LATTICE_ROWS_PER_TASK = 4096
-
-
-def _lattice_parts(spark, n_rows: int) -> int:
-    """Scale-adaptive partition count for the lattice relations: enough
-    partitions to keep every core busy on a big store (ceiling =
-    defaultParallelism), but never more than one task per
-    ``_LATTICE_ROWS_PER_TASK`` rows on a small one."""
-    want = -(-int(n_rows) // _LATTICE_ROWS_PER_TASK) if n_rows > 0 else 1
-    return max(1, min(spark.sparkContext.defaultParallelism, want))
 
 
 def _km_sgn_div_py(x: int, n: int) -> int:
@@ -485,7 +471,7 @@ def kmeans_fit_lattice(spark, k: int = KM_K, iters: int = KM_ITERS):
     v = (
         spark.sql(_km_lattice_sql(SPARK))
         .repartition(
-            _lattice_parts(spark, spark.table("embeddings").count())
+            lattice_parts(spark, spark.table("embeddings").count())
         )
         .localCheckpoint()
     )

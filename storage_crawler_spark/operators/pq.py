@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from storage_crawler_spark.operators import check_model_state
+from storage_crawler_spark.operators.fastpath import lattice_parts
 from storage_crawler_spark.operators.kmeans import kmeans_fit, load_vectors
 
 
@@ -418,10 +419,8 @@ def _pq_lattice_vs(spark, m: int):
     # r15 (guide §2.2): partition count is scale-adaptive (rows / target
     # batch size, capped at defaultParallelism) — a 2000-row store split
     # 32 ways paid ~32 Arrow task setups per fit round for ~60-row
-    # batches; see kmeans._lattice_parts.
-    from storage_crawler_spark.operators.kmeans import _lattice_parts
-
-    n = _lattice_parts(spark, spark.table("embeddings").count())
+    # batches; see fastpath.lattice_parts.
+    n = lattice_parts(spark, spark.table("embeddings").count())
     pv = pv.filter(F.size("qarr") == dim).repartition(n).localCheckpoint()
     dsub = dim // m
     vs = pv.select(

@@ -65,9 +65,11 @@ class QuerySpec:
 
 
 def _persist_view(df: DataFrame, name: str) -> None:
-    """Persist a relation and register it as a temp view — the pattern every
-    builder with a multiply-referenced subplan uses (Spark inlines CTEs, so
-    an un-persisted relation would recompute per reference).
+    """Persist a relation and register it as a temp view — for a
+    multiply-referenced subplan that a SQL generator reads by name (Spark
+    inlines CTEs, so an un-persisted relation would recompute per
+    reference).  A relation only an engine twin reads stays a handle:
+    ``df.persist()`` and pass it on.
 
     CACHE-REACHABILITY caveat (measured, Spark 4.1.2): if the persisted
     relation's own plan contains a WITH (most dialect generators do) AND a
@@ -442,13 +444,10 @@ def _parquet_row_count(path: str) -> int:
 
 def _b_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     V.register_base_tables(spark, sf_dir, ("documents",))
-    # Repartition the *input* before the tokenize/md5 prep runs: the source
-    # may be a single parquet file (1 partition), and both the map-heavy prep
-    # and the O(pairs) intersect work downstream inherit the cached
-    # partitioning — without this the whole operator runs as one task no
-    # matter how many cores exist.
-    n = spark.sparkContext.defaultParallelism
-    spark.table("documents").repartition(n).createOrReplaceTempView("_documents_rep")
+    # Spread the *input* before the tokenize/md5 prep runs: both the
+    # map-heavy prep and the O(pairs) intersect work downstream inherit the
+    # cached partitioning.
+    docs = fastpath.spread(spark.table("documents"))
     # One persisted relation: prep (tokenize+md5, the expensive map) with the
     # sorted-neighborhood rank joined on; the pair join references it twice
     # from cache.  Rank strategy by size: below the threshold, a narrow SQL
@@ -467,16 +466,11 @@ def _b_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # measured wall 3.6→2.5 s min AND JVM CPU 14.9→2.4 at sf0.1, pair set
     # bit-identical (parity test + oracle).
     if _parquet_row_count(f"{sf_dir}/documents.parquet") < 1_000_000:
-        fastpath.jaccard_prep(spark, src="_documents_rep").createOrReplaceTempView(
-            "_jaccard_prep"
-        )
+        fastpath.jaccard_prep(docs).createOrReplaceTempView("_jaccard_prep")
         ranked = spark.sql(dedup.gen_jaccard_ranked(SPARK, "_jaccard_prep", src="documents"))
     else:
-        ranked = dedup.scalable_lang_rank(
-            fastpath.jaccard_prep(spark, src="_documents_rep")
-        )
-    _persist_view(ranked, "_jaccard_ranked")
-    return fastpath.jaccard_pairs_blocked(spark, "_jaccard_ranked")
+        ranked = dedup.scalable_lang_rank(fastpath.jaccard_prep(docs))
+    return fastpath.jaccard_pairs_blocked(ranked.persist())
 
 
 def _b_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -553,8 +547,7 @@ def _b_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold is the dominant cost; Spark inlines CTEs, so the un-persisted form
     would fold epoch 1 twice."""
     V.register_base_tables(spark, sf_dir, ("documents",))
-    n = spark.sparkContext.defaultParallelism
-    spark.table("documents").repartition(n).createOrReplaceTempView("_documents_rep")
+    fastpath.spread(spark.table("documents")).createOrReplaceTempView("_documents_rep")
     enc1 = spark.sql(text.gen_bpe_enc1(SPARK, src="_documents_rep"))
     _checkpoint_view(enc1, "_bpe_enc1")
     return spark.sql(text.gen_bpe_encode(SPARK, enc1_rel="_bpe_enc1"))
@@ -562,8 +555,7 @@ def _b_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _b_bpe_doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     V.register_base_tables(spark, sf_dir, ("documents",))
-    n = spark.sparkContext.defaultParallelism
-    spark.table("documents").repartition(n).createOrReplaceTempView("_documents_rep")
+    fastpath.spread(spark.table("documents")).createOrReplaceTempView("_documents_rep")
     enc1 = spark.sql(text.gen_bpe_enc1(SPARK, src="_documents_rep"))
     _checkpoint_view(enc1, "_bpe_enc1_doc")
     return spark.sql(text.gen_bpe_doc_tokens(SPARK, enc1_rel="_bpe_enc1_doc"))
@@ -571,8 +563,7 @@ def _b_bpe_doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _b_bpe_compression(spark: SparkSession, sf_dir: str) -> DataFrame:
     V.register_base_tables(spark, sf_dir, ("documents",))
-    n = spark.sparkContext.defaultParallelism
-    spark.table("documents").repartition(n).createOrReplaceTempView("_documents_rep")
+    fastpath.spread(spark.table("documents")).createOrReplaceTempView("_documents_rep")
     enc1 = spark.sql(text.gen_bpe_enc1(SPARK, src="_documents_rep"))
     _checkpoint_view(enc1, "_bpe_enc1_comp")
     return spark.sql(text.gen_bpe_compression(SPARK, enc1_rel="_bpe_enc1_comp"))
@@ -586,8 +577,6 @@ def _b_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     un-materialized, each reference re-ran the hashing + df window —
     the measured majority of this entry's tier-2 CPU before r12/r14."""
     V.register_base_tables(spark, sf_dir, ("documents",))
-    n = spark.sparkContext.defaultParallelism
-    spark.table("documents").repartition(n).createOrReplaceTempView("_documents_rep")
     # r14 optimization: the winnow hashing computes per Arrow batch
     # (hashlib md5 per k-gram + NumPy sliding-window min) instead of the
     # interpreted transform(sequence(...)) md5 chain — bit-identical
@@ -598,8 +587,9 @@ def _b_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist.  (A per-fp grouped-Arrow pair generator was A/B'd against
     # the self-join and REVERTED: JVM CPU halved but wall tripled on
     # per-group pandas overhead — see OPTIMIZATION_r14.md.)
-    wn = fastpath.winnow_fp_rows(spark, src="_documents_rep")
-    wn.createOrReplaceTempView("_winnow_rows")
+    fastpath.winnow_fp_rows(
+        fastpath.spread(spark.table("documents"))
+    ).createOrReplaceTempView("_winnow_rows")
     fk = spark.sql(dedup.gen_winnow_fk(SPARK, rows_rel="_winnow_rows"))
     fk = _checkpoint_view(fk, "_winnow_fk")
     # r15 optimization (the r14 verdict's cap-BEFORE-the-boundary shape):
@@ -608,14 +598,8 @@ def _b_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fastpath.winnow_pair_partials generates each fp group's doc pairs
     # vectorized and pre-combines same-chunk duplicates; the JVM sums the
     # partials.  Only the ~13% of fp rows the cap keeps ever cross to
-    # Python (both r14 Arrow attempts shipped all rows and lost).  Chunk
-    # count is scale-adaptive: one chunk per ~8k kept rows, at least the
-    # core count (the checkpoint makes the count job metadata-cheap).
-    n_kept = fk.count()
-    n_chunks = max(n, n_kept // 8192 + 1)
-    fastpath.winnow_pair_partials(
-        spark, "_winnow_fk", n_chunks
-    ).createOrReplaceTempView("_winnow_pair_partials")
+    # Python (both r14 Arrow attempts shipped all rows and lost).
+    fastpath.winnow_pair_partials(fk).createOrReplaceTempView("_winnow_pair_partials")
     return spark.sql(
         dedup.gen_winnow_pairs(
             SPARK,
@@ -627,22 +611,14 @@ def _b_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _b_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     V.register_base_tables(spark, sf_dir, ("documents",))
-    n = spark.sparkContext.defaultParallelism
-    spark.table("documents").repartition(n).createOrReplaceTempView("_documents_rep")
-    # r14 optimization: Arrow fast path for the shingle-md5 signature
-    # map (operators/fastpath.minhash_sigs — bit-identical, parity-pinned)
-    sigs = fastpath.minhash_sigs(spark, src="_documents_rep")
+    sigs = fastpath.minhash_sigs(fastpath.spread(spark.table("documents")))
     _persist_view(sigs, "_minhash_sigs")
     return spark.sql(dedup.gen_minhash_pairs(SPARK, sigs_rel="_minhash_sigs"))
 
 
 def _b_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     V.register_base_tables(spark, sf_dir, ("documents",))
-    n = spark.sparkContext.defaultParallelism
-    spark.table("documents").repartition(n).createOrReplaceTempView("_documents_rep")
-    # r14 optimization: Arrow fast path for the shingle-md5 signature
-    # map (operators/fastpath.minhash_sigs — bit-identical, parity-pinned)
-    sigs = fastpath.minhash_sigs(spark, src="_documents_rep")
+    sigs = fastpath.minhash_sigs(fastpath.spread(spark.table("documents")))
     _persist_view(sigs, "_minhash_sigs_inc")
     return spark.sql(dedup.gen_minhash_pairs_incremental(SPARK, sigs_rel="_minhash_sigs_inc"))
 
@@ -660,22 +636,14 @@ _MINHASH_INC_ORACLE = (
 def _b_cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Minhash-LSH pairs → connected components → keeper per cluster."""
     V.register_base_tables(spark, sf_dir, ("documents",))
-    n = spark.sparkContext.defaultParallelism
-    spark.table("documents").repartition(n).createOrReplaceTempView("_documents_rep")
-    # r14 optimization: Arrow fast path for the shingle-md5 signature
-    # map (operators/fastpath.minhash_sigs — bit-identical, parity-pinned)
-    sigs = fastpath.minhash_sigs(spark, src="_documents_rep")
+    sigs = fastpath.minhash_sigs(fastpath.spread(spark.table("documents")))
     _checkpoint_view(sigs, "_minhash_sigs_cc")
     return cluster.build_minhash_clusters(spark, SPARK, sigs_rel="_minhash_sigs_cc")
 
 
 def _b_cluster_keepers(spark: SparkSession, sf_dir: str) -> DataFrame:
     V.register_base_tables(spark, sf_dir, ("documents",))
-    n = spark.sparkContext.defaultParallelism
-    spark.table("documents").repartition(n).createOrReplaceTempView("_documents_rep")
-    # r14 optimization: Arrow fast path for the shingle-md5 signature
-    # map (operators/fastpath.minhash_sigs — bit-identical, parity-pinned)
-    sigs = fastpath.minhash_sigs(spark, src="_documents_rep")
+    sigs = fastpath.minhash_sigs(fastpath.spread(spark.table("documents")))
     _checkpoint_view(sigs, "_minhash_sigs_ck")
     return cluster.build_minhash_cluster_keepers(spark, SPARK, sigs_rel="_minhash_sigs_ck")
 
@@ -1116,16 +1084,8 @@ def _specs() -> list[QuerySpec]:
         doc="block-cap diagnostic: densest length-window neighborhood + upper bound on rank-capped (dropped) pairs per lang",
     )
     def _b_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # r14 optimization: Arrow fast path (parity-pinned vs the SQL form)
-        # r15: repartition the (possibly single-file) source so the Arrow
-        # signature map parallelizes — same pattern as every other
-        # fastpath consumer (guide §2.5 / §4.1)
         V.register_base_tables(spark, sf_dir, ("documents",))
-        n = spark.sparkContext.defaultParallelism
-        spark.table("documents").repartition(n).createOrReplaceTempView(
-            "_documents_rep_ms"
-        )
-        return fastpath.minhash_sigs(spark, src="_documents_rep_ms")
+        return fastpath.minhash_sigs(fastpath.spread(spark.table("documents")))
 
     add(
         "dedup_minhash_signatures",
@@ -1464,18 +1424,13 @@ def _specs() -> list[QuerySpec]:
         # class the standalone pair builders already materialize away), and
         # take the signatures from the Arrow fast path.
         V.register_base_tables(spark, sf_dir, ("documents",))
-        n = spark.sparkContext.defaultParallelism
-        spark.table("documents").repartition(n).createOrReplaceTempView("_documents_rep")
-        fastpath.jaccard_prep(spark, src="_documents_rep").createOrReplaceTempView(
-            "_lshq_prep"
-        )
+        docs = fastpath.spread(spark.table("documents"))
+        fastpath.jaccard_prep(docs).createOrReplaceTempView("_lshq_prep")
         ranked = spark.sql(dedup.gen_jaccard_ranked(SPARK, "_lshq_prep", src="documents"))
-        _persist_view(ranked, "_lshq_ranked")
-        sigs = fastpath.minhash_sigs(spark, src="_documents_rep")
-        _persist_view(sigs, "_lshq_sigs")
+        _persist_view(fastpath.minhash_sigs(docs), "_lshq_sigs")
         # truth side = the chunked-Arrow pair stage (same relation the
         # dedup_jaccard_pairs entry computes; parity-pinned + oracle-gated)
-        fastpath.jaccard_pairs_blocked(spark, "_lshq_ranked").createOrReplaceTempView(
+        fastpath.jaccard_pairs_blocked(ranked.persist()).createOrReplaceTempView(
             "_lshq_pairs"
         )
         return spark.sql(
@@ -2326,16 +2281,10 @@ FROM base b JOIN last_w l
         from storage_crawler_spark.operators.simhash import simhash_near_dups
 
         V.register_base_tables(spark, sf_dir, ("documents",))
-        # r15 optimization (guide §2.5 input skew / §4.1): the source may be
-        # ONE parquet file (1 scan partition), and the pandas-UDF fingerprint
-        # stage inherits that — the whole md5+vote kernel ran as a single
-        # Python task (measured: ~25 s wall for ~1.2 JVM-CPU-s at sf0.1).
-        # Same repartition-before-the-Python-map pattern as the jaccard /
-        # winnow / minhash builders (_documents_rep).
-        n = spark.sparkContext.defaultParallelism
-        return simhash_near_dups(
-            spark.table("documents").repartition(n), max_hamming=7
-        )
+        # spread the input (fastpath.spread): unspread, the whole md5+vote
+        # pandas-UDF kernel ran as a single Python task (measured: ~25 s
+        # wall for ~1.2 JVM-CPU-s at sf0.1).
+        return simhash_near_dups(fastpath.spread(spark.table("documents")), max_hamming=7)
 
     def _simhash_oracle() -> str:
         from storage_crawler_spark.operators.simhash import simhash_pairs_oracle_sql
@@ -2635,13 +2584,9 @@ FROM files f
         # ngram strings cross exactly one exchange.  Parity-pinned
         # full-entry + oracle-gated; see gen_source_overlap(kept_rel=...).
         V.register_base_tables(spark, sf_dir, ("documents",))
-        n = spark.sparkContext.defaultParallelism
-        spark.table("documents").repartition(n).createOrReplaceTempView(
-            "_srcov_docs_rep"
-        )
-        fastpath.source_gram_rows(spark, src="_srcov_docs_rep").createOrReplaceTempView(
-            "_srcov_rows"
-        )
+        fastpath.source_gram_rows(
+            fastpath.spread(spark.table("documents"))
+        ).createOrReplaceTempView("_srcov_rows")
         kept = spark.sql(
             "SELECT collect_set(source) AS srcs FROM _srcov_rows "
             f"GROUP BY ngram HAVING count(*) <= {text.SOURCE_OVERLAP_MAX_DF}"
@@ -2966,9 +2911,7 @@ FROM files f
         # (hs-intersection vs n_sh) is byte-identical to before.
         # Parity-pinned against the string-keyed form + oracle-gated.
         V.register_base_tables(spark, sf_dir, ("documents",))
-        n = spark.sparkContext.defaultParallelism
-        spark.table("documents").repartition(n).createOrReplaceTempView("_documents_rep_ct")
-        base = fastpath.containment_prep(spark, src="_documents_rep_ct").select(
+        base = fastpath.containment_prep(fastpath.spread(spark.table("documents"))).select(
             "doc_id", "hs", "n_sh"
         )
         _persist_view(base, "_cont_base")
@@ -3136,19 +3079,13 @@ FROM files f
 
     def _b_threshold_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
         V.register_base_tables(spark, sf_dir, ("documents",))
-        n = spark.sparkContext.defaultParallelism
-        spark.table("documents").repartition(n).createOrReplaceTempView("_documents_rep_h")
-        # r14 optimization: Arrow fast path for the tokenize+hash prep
-        fastpath.jaccard_prep(spark, src="_documents_rep_h").createOrReplaceTempView(
-            "_hist_prep"
-        )
+        fastpath.jaccard_prep(
+            fastpath.spread(spark.table("documents"))
+        ).createOrReplaceTempView("_hist_prep")
         ranked = spark.sql(dedup.gen_jaccard_ranked(SPARK, "_hist_prep", src="documents"))
-        _persist_view(ranked, "_hist_ranked")
-        # r14 optimization: the pair relation comes from the chunked-Arrow
-        # pair stage at this entry's LOW threshold (0.3) — same reduceat
-        # vectorization as dedup_jaccard_pairs, parity-pinned per threshold
+        # the pair stage runs at this entry's LOW threshold (0.3)
         fastpath.jaccard_pairs_blocked(
-            spark, "_hist_ranked", threshold=dedup.THRESHOLD_HISTOGRAM_FLOOR
+            ranked.persist(), threshold=dedup.THRESHOLD_HISTOGRAM_FLOOR
         ).createOrReplaceTempView("_hist_pairs")
         return spark.sql(dedup.gen_threshold_histogram(SPARK, pairs_rel="_hist_pairs"))
 
@@ -3358,10 +3295,7 @@ FROM files f
 
     def _b_neardup_contam(spark: SparkSession, sf_dir: str) -> DataFrame:
         V.register_base_tables(spark, sf_dir, ("documents",))
-        n = spark.sparkContext.defaultParallelism
-        spark.table("documents").repartition(n).createOrReplaceTempView("_documents_rep_nc")
-        # r14 optimization: Arrow fast path for the signature map
-        sigs = fastpath.minhash_sigs(spark, src="_documents_rep_nc")
+        sigs = fastpath.minhash_sigs(fastpath.spread(spark.table("documents")))
         _persist_view(sigs, "_minhash_sigs_nc")
         return spark.sql(
             pipeline_ops.gen_neardup_contamination(SPARK, sigs_rel="_minhash_sigs_nc")
@@ -3686,15 +3620,10 @@ FROM files f
 
     # round 7 ----------------------------------------------------------------
     def _b_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # r14 optimization: same Arrow fast path as _b_winnow_pairs for
-        # the md5 k-gram map (the entry's dominant cost); the stats
-        # query itself is unchanged SQL over the relation.
         V.register_base_tables(spark, sf_dir, ("documents",))
-        n = spark.sparkContext.defaultParallelism
-        spark.table("documents").repartition(n).createOrReplaceTempView("_documents_rep")
-        fastpath.winnow_rel(spark, src="_documents_rep").createOrReplaceTempView(
-            "_winnow_fp_rel"
-        )
+        fastpath.winnow_rel(
+            fastpath.spread(spark.table("documents"))
+        ).createOrReplaceTempView("_winnow_fp_rel")
         return spark.sql(
             text.gen_winnow_fingerprints(SPARK, winnow_rel="_winnow_fp_rel")
         )
@@ -3815,12 +3744,9 @@ FROM files f
     )
 
     def _b_multimodal_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # r14 optimization: one exact-int64 NumPy separable DCT per Arrow
-        # batch (operators/fastpath.phash_rel — parity-pinned vs the SQL
-        # form) instead of the interpreted 2x512-multiply folds; the final
-        # ORDER BY doc_id is preserved from the SQL form.
+        # the final ORDER BY doc_id is preserved from the SQL form
         V.register_base_tables(spark, sf_dir, ("documents",))
-        return fastpath.phash_rel(spark, src="documents").orderBy("doc_id")
+        return fastpath.phash_rel(spark.table("documents")).orderBy("doc_id")
 
     add(
         "multimodal_phash",
@@ -4175,14 +4101,9 @@ ORDER BY channel
 
     def _b_mrl_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         V.register_base_tables(spark, sf_dir, ("embeddings",))
-        # checkpoint the lattice (repartitioned off the single-file scan,
-        # PQ-path lesson) so the 4 rankings read the store once, not 6x
-        _checkpoint_view(
-            spark.sql(_gen_mrl_lat(SPARK)).repartition(
-                spark.sparkContext.defaultParallelism
-            ),
-            "_mrl_lat",
-        )
+        # checkpoint the lattice (spread off the single-file scan, PQ-path
+        # lesson) so the 4 rankings read the store once, not 6x
+        _checkpoint_view(fastpath.spread(spark.sql(_gen_mrl_lat(SPARK))), "_mrl_lat")
         return spark.sql(_gen_mrl_audit(SPARK, lat_rel="_mrl_lat"))
 
     add(

@@ -47,8 +47,10 @@ def test_layering_precedence(tmp_path, monkeypatch):
     # later file overrides earlier; non-conflicting keys merge
     cfg = CrawlConfig.from_env()
     assert cfg.tag == "from_home"
-    assert cfg.walkers == 2 and cfg.staters == 7
-    assert cfg.update_interval == 10.0
+    assert cfg.walkers == 2
+    # the reference's staters/update knobs have no analog: ignored
+    assert not hasattr(cfg, "staters") and not hasattr(cfg, "update_interval")
+    assert parse_rc("staters = 7\nupdate = 10\ninjects = 2\ntimeout = 5\n") == {}
 
     # env beats files
     monkeypatch.setenv("STORCRAWL_TAG", "from_env")

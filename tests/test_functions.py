@@ -110,20 +110,18 @@ def test_owner_join_deepest_match(spark):
     """Regression: matched ancestors must rank before unmatched ones — the
     deepest ancestor (the path itself) is rarely in the dim, and must not
     win rank 1 with a NULL owner."""
-    from storage_crawler_spark.functions.owners import owner_join
+    from storage_crawler_spark.functions.owners import find_owner, owner_join
 
-    files = spark.createDataFrame(
-        [
-            (1, b"/data/src3/doc_9"),
-            (2, b"/data/v1.0/src1/doc_2"),
-            (3, b"/archive/src2/x"),
-            (4, b"/other/y"),
-        ],
-        "id LONG, path BINARY",
-    )
-    dim = spark.createDataFrame(
-        [(b"/data/src3", "own_src3"), (b"/data", "datakeeper"), (b"/archive", "archivist")],
-        "dir BINARY, owner STRING",
-    )
+    rows = [
+        (1, b"/data/src3/doc_9"),
+        (2, b"/data/v1.0/src1/doc_2"),
+        (3, b"/archive/src2/x"),
+        (4, b"/other/y"),
+        (5, b"/data/src3/\xff.bin"),  # not UTF-8
+    ]
+    owners = {b"/data/src3": "own_src3", b"/data": "datakeeper", b"/archive": "archivist"}
+    files = spark.createDataFrame(rows, "id LONG, path BINARY")
+    dim = spark.createDataFrame(list(owners.items()), "dir BINARY, owner STRING")
     out = {r.id: r.owner for r in owner_join(files, dim).collect()}
-    assert out == {1: "own_src3", 2: "datakeeper", 3: "archivist", 4: None}
+    assert out == {1: "own_src3", 2: "datakeeper", 3: "archivist", 4: None, 5: "own_src3"}
+    assert out == {i: find_owner(p, owners) for i, p in rows}

@@ -75,7 +75,7 @@ def test_winnow_rel_fastpath_matches_sql(spark, sf_dir, edge_docs_view, src_kind
     else:
         src = edge_docs_view
     sql_df = spark.sql(text.gen_winnow_rel(D, src=src))
-    fast_df = fastpath.winnow_rel(spark, src=src)
+    fast_df = fastpath.winnow_rel(spark.table(src))
     assert fast_df.schema == sql_df.schema
     a = _rows(sql_df.selectExpr("doc_id", "n_grams", "fps"), ["doc_id"])
     b = _rows(fast_df.selectExpr("doc_id", "n_grams", "fps"), ["doc_id"])
@@ -91,12 +91,12 @@ def test_winnow_fp_rows_matches_exploded_rel(spark, sf_dir, edge_docs_view, src_
         src = "documents"
     else:
         src = edge_docs_view
-    rel = fastpath.winnow_rel(spark, src=src)
+    rel = fastpath.winnow_rel(spark.table(src))
     rel.createOrReplaceTempView("_t14_wrel")
     exploded = spark.sql(
         f"SELECT doc_id, fp FROM _t14_wrel {D.lateral_explode('fps', 'fp')}"
     )
-    rows = fastpath.winnow_fp_rows(spark, src=src)
+    rows = fastpath.winnow_fp_rows(spark.table(src))
     assert rows.schema == exploded.schema
     assert _rows(exploded, ["doc_id", "fp"]) == _rows(rows, ["doc_id", "fp"])
 
@@ -114,7 +114,7 @@ def test_minhash_sigs_fastpath_matches_sql(spark, sf_dir, edge_docs_view, src_ki
     else:
         src = edge_docs_view
     sql_df = spark.sql(dedup.gen_minhash_sigs(D, src=src))
-    fast_df = fastpath.minhash_sigs(spark, src=src)
+    fast_df = fastpath.minhash_sigs(spark.table(src))
     assert [f.name for f in fast_df.schema.fields] == [f.name for f in sql_df.schema.fields]
     a = _rows(sql_df, ["doc_id"])
     b = _rows(fast_df, ["doc_id"])
@@ -133,7 +133,7 @@ def test_minhash_bands_explode_matches_union(spark, sf_dir, edge_docs_view, src_
         src = "documents"
     else:
         src = edge_docs_view
-    sigs = fastpath.minhash_sigs(spark, src=src)
+    sigs = fastpath.minhash_sigs(spark.table(src))
     sigs.createOrReplaceTempView("_r14_bands_sigs")
     explode_df = spark.sql(dedup.gen_minhash_bands(D, "_r14_bands_sigs"))
     union_sql = "\nUNION ALL\n".join(
@@ -172,7 +172,7 @@ def test_containment_prep_fastpath_matches_sql(spark, sf_dir, edge_docs_view, sr
         src = "documents"
     else:
         src = edge_docs_view
-    base = fastpath.containment_prep(spark, src=src)
+    base = fastpath.containment_prep(spark.table(src))
     base.createOrReplaceTempView("_t14_cont_base")
     sql_shingles = spark.sql(
         f"SELECT doc_id, {D.adistinct(_shingles(D))} AS shingles "
@@ -205,7 +205,7 @@ def test_jaccard_prep_fastpath_same_pairs(spark, sf_dir):
     old_ranked.createOrReplaceTempView("_t14_ranked_sql")
     old = spark.sql(dedup.gen_jaccard_pairs(D, ranked_rel="_t14_ranked_sql"))
 
-    fastpath.jaccard_prep(spark, src="documents").createOrReplaceTempView("_t14_prep_fast")
+    fastpath.jaccard_prep(spark.table("documents")).createOrReplaceTempView("_t14_prep_fast")
     new_ranked = spark.sql(dedup.gen_jaccard_ranked(D, "_t14_prep_fast", src="documents"))
     new_ranked.createOrReplaceTempView("_t14_ranked_fast")
     new = spark.sql(dedup.gen_jaccard_pairs(D, ranked_rel="_t14_ranked_fast"))
@@ -219,7 +219,7 @@ def test_jaccard_prefix_filter_is_pure_pruning(spark, sf_dir):
     from storage_crawler_spark.operators import dedup, fastpath
 
     _register_docs(spark, sf_dir)
-    fastpath.jaccard_prep(spark, src="documents").createOrReplaceTempView("_t14_pf_prep")
+    fastpath.jaccard_prep(spark.table("documents")).createOrReplaceTempView("_t14_pf_prep")
     ranked = spark.sql(dedup.gen_jaccard_ranked(D, "_t14_pf_prep", src="documents"))
     ranked.persist()
     ranked.createOrReplaceTempView("_t14_pf_ranked")
@@ -251,7 +251,7 @@ def test_jaccard_prep_fastpath_meta_columns(spark, sf_dir):
     sql_df = spark.sql(dedup.gen_jaccard_prep(D, src="documents")).selectExpr(
         "doc_id", "lang", "n_chars", "n_toks"
     )
-    fast_df = fastpath.jaccard_prep(spark, src="documents").selectExpr(
+    fast_df = fastpath.jaccard_prep(spark.table("documents")).selectExpr(
         "doc_id", "lang", "n_chars", "n_toks"
     )
     assert fast_df.schema == sql_df.schema
@@ -429,7 +429,7 @@ def test_winnow_fk_window_form_matches_join_form(spark, sf_dir, edge_docs_view, 
         src = "documents"
     else:
         src = edge_docs_view
-    rows = fastpath.winnow_fp_rows(spark, src=src)
+    rows = fastpath.winnow_fp_rows(spark.table(src))
     rows.createOrReplaceTempView("_t14_wfk_rows")
     cap = dedup.WINNOW_DF_CAP
     join_form = spark.sql(
@@ -461,14 +461,14 @@ def test_jaccard_pairs_blocked_matches_sql(spark, sf_dir, edge_docs_view, src_ki
         src = "documents"
     else:
         src = edge_docs_view
-    fastpath.jaccard_prep(spark, src=src).createOrReplaceTempView("_t14_jb_prep")
+    fastpath.jaccard_prep(spark.table(src)).createOrReplaceTempView("_t14_jb_prep")
     ranked = spark.sql(dedup.gen_jaccard_ranked(D, "_t14_jb_prep", src=src))
     ranked.persist()
     ranked.createOrReplaceTempView("_t14_jb_ranked")
     sql_pairs = spark.sql(
         dedup.gen_jaccard_pairs(D, threshold=thr, ranked_rel="_t14_jb_ranked")
     )
-    fast_pairs = fastpath.jaccard_pairs_blocked(spark, "_t14_jb_ranked", threshold=thr)
+    fast_pairs = fastpath.jaccard_pairs_blocked(ranked, threshold=thr)
     assert fast_pairs.schema == sql_pairs.schema
     assert _rows(sql_pairs, ["doc_a", "doc_b"]) == _rows(fast_pairs, ["doc_a", "doc_b"])
     ranked.unpersist()
@@ -523,7 +523,7 @@ def test_source_gram_rows_matches_sql_distinct(spark, multisrc_docs_view):
         + text.gen_token_ngrams(D, passthrough=("source",), src=multisrc_docs_view)
         + ") g WHERE source IS NOT NULL) t"
     )
-    fast = fastpath.source_gram_rows(spark, src=multisrc_docs_view)
+    fast = fastpath.source_gram_rows(spark.table(multisrc_docs_view))
     assert fast.schema == sql_rows.schema
     assert sorted(map(tuple, sql_rows.collect())) == sorted(map(tuple, fast.collect()))
 
@@ -543,7 +543,7 @@ def test_source_overlap_kept_form_matches_inline(spark, sf_dir, multisrc_docs_vi
         grams = spark.sql(text.gen_token_ngrams(D, passthrough=("source",), src=src))
         grams.createOrReplaceTempView("_t14_srcov_grams")
         inline = spark.sql(text.gen_source_overlap(D, gram_rel="_t14_srcov_grams"))
-    fastpath.source_gram_rows(spark, src=src).createOrReplaceTempView("_t14_srcov_rows")
+    fastpath.source_gram_rows(spark.table(src)).createOrReplaceTempView("_t14_srcov_rows")
     kept = spark.sql(
         "SELECT collect_set(source) AS srcs FROM _t14_srcov_rows "
         f"GROUP BY ngram HAVING count(*) <= {text.SOURCE_OVERLAP_MAX_DF}"
@@ -583,7 +583,7 @@ def test_containment_hash_keyed_candidates_same_pairs(
     else:
         src = edge_docs_view
 
-    base = fastpath.containment_prep(spark, src=src)
+    base = fastpath.containment_prep(spark.table(src))
     base.createOrReplaceTempView("_t14_cont_b")
     spark.sql("SELECT doc_id, hs, n_sh FROM _t14_cont_b").createOrReplaceTempView(
         "_t14_cont_pr"
@@ -657,7 +657,7 @@ def test_phash_rel_fastpath_matches_sql(spark, sf_dir, src_kind):
         spark.read.parquet(path).createOrReplaceTempView("documents")
 
     sql_df = spark.sql(multimodal.gen_phash(D))
-    fast_df = fastpath.phash_rel(spark, src="documents").orderBy("doc_id")
+    fast_df = fastpath.phash_rel(spark.table("documents")).orderBy("doc_id")
     assert [f.name for f in fast_df.schema.fields] == [
         f.name for f in sql_df.schema.fields
     ]

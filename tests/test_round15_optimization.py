@@ -9,11 +9,11 @@ Changes pinned here:
 - fastpath.winnow_pair_partials: the fp-keyed pair SELF-join of
   dedup_winnow_pairs replaced by a chunked Arrow pair stage over the
   df-capped (checkpointed) fingerprint relation.
-- kmeans._lattice_parts: scale-adaptive partition counts for the lattice
+- fastpath.lattice_parts: scale-adaptive partition counts for the lattice
   fit relations (values are partitioning-independent; the pin is the
   bounds contract).
-- input repartition before the simhash / minhash-signature pandas-UDF
-  stages (pure parallelism; values must not move).
+- fastpath.spread before the simhash / minhash / jaccard-prep / winnow
+  pandas-UDF stages (pure parallelism; values must not move).
 """
 
 from __future__ import annotations
@@ -41,19 +41,15 @@ def test_winnow_pair_partials_matches_self_join(spark, sf_dir, n_chunks):
     from storage_crawler_spark.operators import dedup, fastpath
 
     _register_docs(spark, sf_dir)
-    n = spark.sparkContext.defaultParallelism
-    spark.table("documents").repartition(n).createOrReplaceTempView(
-        "_r15_docs_rep"
-    )
-    wn = fastpath.winnow_fp_rows(spark, src="_r15_docs_rep")
+    wn = fastpath.winnow_fp_rows(fastpath.spread(spark.table("documents")))
     wn.createOrReplaceTempView("_r15_winnow_rows")
-    fk = spark.sql(dedup.gen_winnow_fk(D, rows_rel="_r15_winnow_rows"))
-    fk.localCheckpoint().createOrReplaceTempView("_r15_winnow_fk")
+    fk = spark.sql(dedup.gen_winnow_fk(D, rows_rel="_r15_winnow_rows")).localCheckpoint()
+    fk.createOrReplaceTempView("_r15_winnow_fk")
 
     join_form = spark.sql(dedup.gen_winnow_pairs(D, fk_rel="_r15_winnow_fk"))
-    fastpath.winnow_pair_partials(
-        spark, "_r15_winnow_fk", n_chunks
-    ).createOrReplaceTempView("_r15_pair_partials")
+    fastpath.winnow_pair_partials(fk, n_chunks).createOrReplaceTempView(
+        "_r15_pair_partials"
+    )
     arrow_form = spark.sql(
         dedup.gen_winnow_pairs(
             D, fk_rel="_r15_winnow_fk", pair_partials_rel="_r15_pair_partials"
@@ -78,33 +74,42 @@ def test_winnow_pair_partials_guards():
 def test_lattice_parts_bounds(spark):
     """Scale-adaptive partition count: >=1 always, 1 while the store is
     below one batch target, capped at defaultParallelism for huge stores."""
-    from storage_crawler_spark.operators.kmeans import (
-        _LATTICE_ROWS_PER_TASK,
-        _lattice_parts,
+    from storage_crawler_spark.operators.fastpath import (
+        LATTICE_ROWS_PER_TASK,
+        lattice_parts,
     )
 
     par = spark.sparkContext.defaultParallelism
-    assert _lattice_parts(spark, 0) == 1
-    assert _lattice_parts(spark, 1) == 1
-    assert _lattice_parts(spark, _LATTICE_ROWS_PER_TASK) == 1
-    assert _lattice_parts(spark, _LATTICE_ROWS_PER_TASK + 1) == min(par, 2)
-    assert _lattice_parts(spark, 10**12) == par
+    assert lattice_parts(spark, 0) == 1
+    assert lattice_parts(spark, 1) == 1
+    assert lattice_parts(spark, LATTICE_ROWS_PER_TASK) == 1
+    assert lattice_parts(spark, LATTICE_ROWS_PER_TASK + 1) == min(par, 2)
+    assert lattice_parts(spark, 10**12) == par
 
 
 def test_simhash_pairs_invariant_under_input_repartition(spark, sf_dir):
     """The simhash builder now repartitions its (possibly single-file)
     input before the pandas-UDF fingerprint stage; the pair set must be
     byte-identical to the unrepartitioned form."""
+    from storage_crawler_spark.operators.fastpath import spread
     from storage_crawler_spark.operators.simhash import simhash_near_dups
 
     _register_docs(spark, sf_dir)
     docs = spark.table("documents")
     base = _rows(simhash_near_dups(docs, max_hamming=7), ["doc_a", "doc_b"])
-    rep = _rows(
-        simhash_near_dups(
-            docs.repartition(spark.sparkContext.defaultParallelism),
-            max_hamming=7,
-        ),
-        ["doc_a", "doc_b"],
-    )
+    rep = _rows(simhash_near_dups(spread(docs), max_hamming=7), ["doc_a", "doc_b"])
     assert base == rep and len(base) > 0
+
+
+@pytest.mark.parametrize("twin", ["minhash_sigs", "jaccard_prep", "winnow_fp_rows"])
+def test_twin_invariant_under_spread(spark, sf_dir, twin):
+    """The builders feed these engine twins fastpath.spread(documents);
+    every output row must be byte-identical to the unspread form."""
+    from storage_crawler_spark.operators import fastpath
+
+    _register_docs(spark, sf_dir)
+    docs = spark.table("documents")
+    fn = getattr(fastpath, twin)
+    base = sorted(map(tuple, fn(docs).collect()))
+    spread = sorted(map(tuple, fn(fastpath.spread(docs)).collect()))
+    assert base == spread and len(base) > 0
