@@ -51,41 +51,38 @@ TIER2_QUERIES = (
 )
 
 
-def _cpu_seconds_by_group(spark) -> dict[str, float]:
-    """Sum of executor task CPU time (seconds) per job group, read from the
-    status REST API after all measured runs.  Stages shared by several jobs
-    of one group count once (set union); SKIPPED stages never executed and
-    carry no CPU.  Returns {} if the UI/REST surface is unavailable — CPU
-    is a companion metric, never a bench failure."""
+def cpu_seconds_by_group(spark, prefixes: tuple[str, ...]) -> dict[str, float]:
+    """Sum of executor task CPU time (seconds) per job group whose tag
+    starts with one of ``prefixes``, read from the status REST API (so the
+    session needs its UI on).  Stages shared by several jobs of one group
+    count once (set union); SKIPPED stages never executed and carry no CPU.
+    tools/profile_cpu.py reads its step groups with this too."""
     import urllib.request
 
-    try:
-        base = spark.sparkContext.uiWebUrl
-        app_id = spark.sparkContext.applicationId
+    base = spark.sparkContext.uiWebUrl
+    app_id = spark.sparkContext.applicationId
 
-        def fetch(path: str):
-            with urllib.request.urlopen(
-                f"{base}/api/v1/applications/{app_id}{path}", timeout=30
-            ) as r:
-                return json.loads(r.read())
+    def fetch(path: str):
+        with urllib.request.urlopen(
+            f"{base}/api/v1/applications/{app_id}{path}", timeout=30
+        ) as r:
+            return json.loads(r.read())
 
-        cpu_ns = {}
-        for st in fetch("/stages?status=complete&details=false"):
-            key = st["stageId"]
-            # keep the max attempt (retries re-run the work; the surviving
-            # attempt's CPU is the one the query actually consumed)
-            cpu_ns[key] = max(cpu_ns.get(key, 0), st.get("executorCpuTime", 0))
-        groups: dict[str, set] = {}
-        for job in fetch("/jobs"):
-            tag = job.get("jobGroup")
-            if tag and (tag.startswith("bench:") or tag.startswith("tier2:")):
-                groups.setdefault(tag, set()).update(job.get("stageIds", ()))
-        return {
-            tag: sum(cpu_ns.get(s, 0) for s in sids) / 1e9
-            for tag, sids in groups.items()
-        }
-    except Exception:  # noqa: BLE001
-        return {}
+    cpu_ns = {}
+    for st in fetch("/stages?status=complete&details=false"):
+        key = st["stageId"]
+        # keep the max attempt (retries re-run the work; the surviving
+        # attempt's CPU is the one the query actually consumed)
+        cpu_ns[key] = max(cpu_ns.get(key, 0), st.get("executorCpuTime", 0))
+    groups: dict[str, set] = {}
+    for job in fetch("/jobs"):
+        tag = job.get("jobGroup")
+        if tag and tag.startswith(prefixes):
+            groups.setdefault(tag, set()).update(job.get("stageIds", ()))
+    return {
+        tag: sum(cpu_ns.get(s, 0) for s in sids) / 1e9
+        for tag, sids in groups.items()
+    }
 
 
 def main() -> int:
@@ -213,7 +210,10 @@ def main() -> int:
     # CPU-seconds companion metric (r10 VERDICT item 3): min over reps of
     # the per-rep executor-task CPU sum — load-robust where wall time is
     # not (box drift inflates wall uniformly but leaves task CPU alone).
-    by_group = _cpu_seconds_by_group(spark)
+    try:
+        by_group = cpu_seconds_by_group(spark, ("bench:", "tier2:"))
+    except Exception:  # noqa: BLE001 — CPU is a companion metric, never a bench failure
+        by_group = {}
     cpu_s: dict[str, float] = {}
     tier2_cpu_s: dict[str, float] = {}
     for tag, sec in by_group.items():

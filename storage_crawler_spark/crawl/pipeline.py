@@ -1,4 +1,4 @@
-"""Crawl orchestration: frontier loop → enrichment → files/status DataFrames.
+"""Crawl orchestration: frontier loop → files/status DataFrames.
 
 Re-expresses the reference's begin_scan lifecycle (storcrawl.py:530-636):
 queues/sentinels/locks are replaced by Spark's DAG; the nine lifecycle
@@ -20,8 +20,8 @@ from pyspark.sql import functions as F
 
 from storage_crawler_spark.config import CrawlConfig
 from storage_crawler_spark.crawl.walker import expand_level, stat_roots
-from storage_crawler_spark.functions.owners import owner_col, parse_owners_file
-from storage_crawler_spark.functions.paths import extension_col, mode_bits_col
+from storage_crawler_spark.functions.owners import parse_owners_file
+from storage_crawler_spark.functions.paths import mode_bits_col
 from storage_crawler_spark.schemas import STATUS_SCHEMA
 
 # Lifecycle events of the reference crawl (storcrawl.py:575-629).
@@ -105,7 +105,7 @@ def crawl(spark: SparkSession, config: CrawlConfig) -> CrawlResult:
     # ``descend`` (is_dir AND not excluded) drives the frontier; the emitted
     # is_dir column stays the real lstat answer for excluded dirs too.
     t_walk = _time.time()
-    entries = stat_roots(spark, roots)
+    entries = stat_roots(spark, roots, config.extension_length, owners)
     frontier = entries.filter(F.col("descend")).select("path")
     levels = [entries.drop("descend")]
     depth = 0
@@ -124,6 +124,7 @@ def crawl(spark: SparkSession, config: CrawlConfig) -> CrawlResult:
         level = expand_level(
             frontier, exclude, parallelism,
             levels_per_job=k, dir_budget=config.deep_dir_budget,
+            extension_length=config.extension_length, owners=owners,
         )
         # Flatten lineage: each level's plan is materialized so a deep tree
         # doesn't nest N mapInPandas stages into one giant plan.
@@ -139,13 +140,12 @@ def crawl(spark: SparkSession, config: CrawlConfig) -> CrawlResult:
     for lv in levels[1:]:
         all_entries = all_entries.unionByName(lv)
 
-    # --- enrichment (extension, owner, mode bits, id, insert_time) --------
+    # --- files stage (mode bits, id, insert_time; extension and owner came
+    # out of the walker kernel) ----------------------------------------------
     t_stat = _time.time()
     obs = Observation("crawl")
     enriched = (
-        all_entries.withColumn("extension", extension_col(F.col("path"), config.extension_length))
-        .withColumn("owner", owner_col(spark, F.col("path"), owners))
-        .withColumn("st_mode", mode_bits_col(F.col("st_mode_int")))
+        all_entries.withColumn("st_mode", mode_bits_col(F.col("st_mode_int")))
         .withColumn("id", F.monotonically_increasing_id())
         .withColumn("insert_time", F.current_timestamp())
         .withColumn("st_dev", F.col("st_dev").cast("string"))
@@ -188,10 +188,11 @@ def crawl(spark: SparkSession, config: CrawlConfig) -> CrawlResult:
     # metric snapshot in the reference's vocabulary (storcrawl.py:494-521);
     # walk and stat rates over their own stage (storcrawl.py:503-505), the
     # insert rate over the whole crawl until the sink has a timer of its own.
-    # The lstat calls run inside the walk (the fused scandir walker; the roots
-    # are stat'ed on the driver by stat_roots), so "file stat rate" measures
-    # the enrichment stage (extension, owner, mode bits, files_stage
-    # materialize) that stands where the reference's stater pool does.
+    # The lstat calls, extension and owner all run inside the walk (the fused
+    # scandir kernel; the roots are stat'ed on the driver by stat_roots), so
+    # "file stat rate" times only the files_stage materialize (mode bits, id,
+    # insert_time), the stage that stands where the reference's stater pool
+    # does.
     status_log.extend(
         [
             ("files stated", float(file_count), "files"),

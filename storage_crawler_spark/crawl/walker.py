@@ -1,14 +1,27 @@
-"""Distributed directory expansion + stat — the crawl plane's hot path.
+"""Distributed directory expansion + stat — the crawl plane's hot path, and
+the one place a filesystem entry becomes a row.
 
 The reference runs N walker processes popping a shared dir queue
 (``os.scandir`` per dir, re-enqueue child dirs, emit every entry) and N
-stater processes calling ``os.lstat`` per path (storcrawl.py:420-488).  The
-Spark-native shape is a **per-level frontier loop**: the set of directories
-at depth d is a DataFrame; one ``mapInPandas`` pass scans every directory in
-the frontier AND stats its entries in the same Arrow batch (scandir's
-DirEntry.stat(follow_symlinks=False) is the lstat — one syscall pass, no
-inter-stage queue hop), emitting a columnar batch of entries; the child
-directories become the depth d+1 frontier.
+stater processes calling lstat per path, building each record as
+``(path, stat_result, extension, owner)`` in the stat stage
+(storcrawl.py:326, 420-488).  The Spark-native shape is a **per-level
+frontier loop**: the set of directories at depth d is a DataFrame; one
+``mapInPandas`` pass scans every directory in the frontier AND stats its
+entries in the same Arrow batch (scandir's DirEntry.stat(follow_symlinks=
+False) is the lstat — one syscall pass, no inter-stage queue hop), derives
+each entry's extension and owner from the path bytes it already holds, and
+emits a columnar batch of finished records; the child directories become
+the depth d+1 frontier.
+
+Row builders shared by every plane that stats entries:
+- :func:`lstat_row` — one lstat call on a path (crawl roots, the
+  incremental crawl's landed paths, fsmeta's roots and loose entries);
+- :func:`dir_entry_row` — one scandir ``DirEntry`` (the frontier kernel and
+  fsmeta's subtree walk).
+Both return an ENTRY_SCHEMA tuple with ``is_dir``/``is_symlink`` taken from
+the lstat mode bits; the two crawls append extension and owner
+(:data:`CRAWL_ROW_SCHEMA`), fsmeta emits ENTRY_SCHEMA as is.
 
 Scale properties:
 - work distribution: the frontier is repartitioned by path hash each level,
@@ -20,6 +33,8 @@ Scale properties:
   only sees per-level counts (Spark actions), never paths.
 - lineage: each level is localCheckpoint()ed to keep the plan tree flat
   (a depth-30 tree would otherwise nest 30 unions of mapInPandas plans).
+- the owner map is small (thousands of dirs) and travels in the kernel's
+  closure, so the walk needs no second pass over its rows.
 
 Semantics preserved from the reference:
 - every entry (file, dir, symlink) is emitted, including excluded dirs
@@ -36,38 +51,45 @@ columns plus an ``error`` string instead.
 from __future__ import annotations
 
 import os
+from collections import deque
+from stat import S_ISDIR, S_ISLNK
 from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import BinaryType, BooleanType, StringType, StructField, StructType
 
-from pyspark.sql.types import BooleanType, StructField, StructType
-
+from storage_crawler_spark.functions.owners import find_owner
+from storage_crawler_spark.functions.paths import find_extension
 from storage_crawler_spark.schemas import ENTRY_SCHEMA
 
 _BATCH_ROWS = 8192
 
-# ENTRY_SCHEMA + the internal descend flag (is_dir AND not excluded).  The
-# record's is_dir column is the REAL lstat answer — an excluded directory is
-# still a directory (the exclusion contract gates descent only); the caller
-# derives the next frontier from ``descend`` and drops the column.
-# (Built as a fresh StructType: StructType.add mutates in place.)
-ENTRY_DESCEND_SCHEMA = StructType(
-    list(ENTRY_SCHEMA.fields) + [StructField("descend", BooleanType())]
+# ENTRY_SCHEMA + the two path-derived columns both crawls emit.
+# (Built as fresh StructTypes: StructType.add mutates in place.)
+CRAWL_ROW_SCHEMA = StructType(
+    list(ENTRY_SCHEMA.fields)
+    + [StructField("extension", BinaryType()), StructField("owner", StringType())]
+)
+
+# CRAWL_ROW_SCHEMA + the internal descend flag (is_dir AND not excluded).
+# The record's is_dir column is the REAL lstat answer — an excluded
+# directory is still a directory (the exclusion contract gates descent
+# only); the caller derives the next frontier from ``descend`` and drops
+# the column.
+CRAWL_DESCEND_SCHEMA = StructType(
+    list(CRAWL_ROW_SCHEMA.fields) + [StructField("descend", BooleanType())]
 )
 
 
-def _entry_record(path: bytes, st, is_dir: bool, is_symlink: bool, error: str | None):
-    """ENTRY_SCHEMA tuple (no descend column — streaming/incremental.py
-    shares this for plain per-path stats)."""
-    if st is None:
-        return (path, is_dir, is_symlink) + (None,) * 10 + (error,)
+def _stat_row(path: bytes, st) -> tuple:
+    mode = st.st_mode
     return (
         path,
-        is_dir,
-        is_symlink,
-        int(st.st_mode),
+        S_ISDIR(mode),
+        S_ISLNK(mode),
+        int(mode),
         int(st.st_ino),
         int(st.st_dev),
         int(st.st_nlink),
@@ -81,10 +103,31 @@ def _entry_record(path: bytes, st, is_dir: bool, is_symlink: bool, error: str | 
     )
 
 
-def _entry_record_descend(
-    path: bytes, st, is_dir: bool, is_symlink: bool, error: str | None, descend: bool
-):
-    return _entry_record(path, st, is_dir, is_symlink, error) + (descend,)
+def _error_row(path: bytes, exc: OSError) -> tuple:
+    return (path, False, False) + (None,) * 10 + (str(exc),)
+
+
+def lstat_row(path: bytes) -> tuple:
+    """ENTRY_SCHEMA tuple for ``path`` from one lstat call."""
+    try:
+        return _stat_row(path, os.lstat(path))
+    except OSError as exc:
+        return _error_row(path, exc)
+
+
+def dir_entry_row(entry: os.DirEntry) -> tuple:
+    """ENTRY_SCHEMA tuple for a scandir entry (its cached lstat)."""
+    path = os.fsencode(entry.path)
+    try:
+        return _stat_row(path, entry.stat(follow_symlinks=False))
+    except OSError as exc:
+        return _error_row(path, exc)
+
+
+def _enrich(row: tuple, extension_length: int, owners: dict[bytes, str] | None) -> tuple:
+    """ENTRY_SCHEMA tuple → CRAWL_ROW_SCHEMA tuple."""
+    path = row[0]
+    return row + (find_extension(path, extension_length), find_owner(path, owners))
 
 
 def scan_frontier_batches(
@@ -92,9 +135,11 @@ def scan_frontier_batches(
     exclude_names: frozenset[bytes],
     levels_per_job: int = 1,
     dir_budget: int = 64,
+    extension_length: int = 6,
+    owners: dict[bytes, str] | None = None,
 ) -> Iterator[pd.DataFrame]:
     """mapInPandas kernel: for each frontier directory, scandir + lstat its
-    children, yielding columnar batches of ENTRY_DESCEND_SCHEMA rows.
+    children, yielding columnar batches of CRAWL_DESCEND_SCHEMA rows.
 
     ``is_dir`` is the real lstat answer (symlinks-to-dirs are False —
     follow_symlinks=False); ``descend`` additionally applies the exclusion
@@ -118,9 +163,8 @@ def scan_frontier_batches(
     Routing is decided at enqueue time, so every emitted row's descend
     flag is final.
     """
-    cols = [f.name for f in ENTRY_DESCEND_SCHEMA.fields]
+    cols = [f.name for f in CRAWL_DESCEND_SCHEMA.fields]
     buf: list[tuple] = []
-    from collections import deque
 
     for pdf in dir_paths:
         queue: deque[tuple[bytes, int]] = deque(
@@ -131,29 +175,20 @@ def scan_frontier_batches(
             d, rel = queue.popleft()
             try:
                 it = os.scandir(d)
-            except OSError as exc:
+            except OSError:
                 # Unreadable dir: the dir row itself was emitted by the
                 # parent's scan; the reference just logs and moves on
                 # (storcrawl.py:463 try) — we do the same: skip.
-                _ = exc
                 continue
             with it:
                 for entry in it:
-                    name = os.path.basename(entry.path.encode() if isinstance(entry.path, str) else entry.path)
-                    epath = entry.path if isinstance(entry.path, bytes) else entry.path.encode()
-                    try:
-                        st = entry.stat(follow_symlinks=False)
-                        is_symlink = entry.is_symlink()
-                        is_dir = entry.is_dir(follow_symlinks=False)
-                        err = None
-                    except OSError as exc:
-                        st, is_symlink, is_dir, err = None, False, False, str(exc)
-                    descend = is_dir and name not in exclude_names
+                    row = dir_entry_row(entry)
+                    descend = row[1] and entry.name not in exclude_names
                     if descend and rel + 1 < levels_per_job and extra < dir_budget:
-                        queue.append((epath, rel + 1))
+                        queue.append((row[0], rel + 1))
                         extra += 1
                         descend = False  # handled in-task; driver must not re-scan
-                    buf.append(_entry_record_descend(epath, st, is_dir, is_symlink, err, descend))
+                    buf.append(_enrich(row, extension_length, owners) + (descend,))
                     if len(buf) >= _BATCH_ROWS:
                         yield pd.DataFrame(buf, columns=cols)
                         buf = []
@@ -167,18 +202,22 @@ def expand_level(
     parallelism: int,
     levels_per_job: int = 1,
     dir_budget: int = 64,
+    extension_length: int = 6,
+    owners: dict[bytes, str] | None = None,
 ) -> DataFrame:
-    """One frontier level → entries DataFrame (ENTRY_DESCEND_SCHEMA).
+    """One frontier level → entries DataFrame (CRAWL_DESCEND_SCHEMA).
     ``levels_per_job`` > 1 lets each task descend that many levels in-task
     (deep-chain mode — see :func:`scan_frontier_batches`)."""
     n = max(1, parallelism)
     kernel = lambda it: scan_frontier_batches(  # noqa: E731
-        it, exclude_names, levels_per_job, dir_budget
+        it, exclude_names, levels_per_job, dir_budget, extension_length, owners
     )
-    return frontier.repartition(n, F.col("path")).mapInPandas(kernel, ENTRY_DESCEND_SCHEMA)
+    return frontier.repartition(n, F.col("path")).mapInPandas(kernel, CRAWL_DESCEND_SCHEMA)
 
 
-def stat_roots(spark, roots: list[bytes]) -> DataFrame:
+def stat_roots(
+    spark, roots: list[bytes], extension_length: int = 6, owners: dict[bytes, str] | None = None
+) -> DataFrame:
     """Stat the crawl roots themselves (the reference seeds roots into the
     dir queue, so root dirs appear as rows too once their parent is scanned —
     but roots have no parent in the crawl, so we stat them explicitly).
@@ -186,10 +225,17 @@ def stat_roots(spark, roots: list[bytes]) -> DataFrame:
     exclusion check applies to dirs FOUND during the walk, not to seeds."""
     recs = []
     for r in roots:
-        try:
-            st = os.lstat(r)
-            is_dir = os.path.isdir(r) and not os.path.islink(r)
-            recs.append(_entry_record_descend(r, st, is_dir, os.path.islink(r), None, is_dir))
-        except OSError as exc:
-            recs.append(_entry_record_descend(r, None, False, False, str(exc), False))
-    return spark.createDataFrame(recs, ENTRY_DESCEND_SCHEMA)
+        row = lstat_row(r)
+        recs.append(_enrich(row, extension_length, owners) + (row[1],))
+    return spark.createDataFrame(recs, CRAWL_DESCEND_SCHEMA)
+
+
+def stat_path_batches(
+    pdfs: Iterator[pd.DataFrame], extension_length: int = 6, owners: dict[bytes, str] | None = None
+) -> Iterator[pd.DataFrame]:
+    """mapInPandas kernel: lstat each path of a ``path`` column, no descent
+    (the incremental crawl's landed paths); CRAWL_ROW_SCHEMA batches."""
+    cols = [f.name for f in CRAWL_ROW_SCHEMA.fields]
+    for pdf in pdfs:
+        recs = [_enrich(lstat_row(bytes(raw)), extension_length, owners) for raw in pdf["path"]]
+        yield pd.DataFrame(recs, columns=cols)

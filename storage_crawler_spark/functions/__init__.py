@@ -1,5 +1,4 @@
 from storage_crawler_spark.functions.paths import (  # noqa: F401
-    extension_bytes,
     extension_col,
     find_extension,
     mode_bits_col,

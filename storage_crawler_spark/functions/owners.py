@@ -2,17 +2,19 @@
 
 The reference loads an ``owner=dir1:dir2:...`` map file into a dict and, for
 every statted path, walks ``dirname()`` upward returning the first (deepest)
-mapped ancestor (storcrawl.py:219-256).  Two Spark-native strategies:
+mapped ancestor (storcrawl.py:219-256).  Both crawls call ``find_owner``
+inside the walker kernel (``crawl.walker``), with the small owner map
+(thousands of dirs) in the kernel's closure: O(depth) dict probes per path,
+no shuffle, no second pass.  Two column functions remain for ad-hoc
+DataFrames of paths:
 
-1. **Broadcast dict + pandas UDF** (`owner_col`) — the owner map is small
-   (thousands of dirs); broadcast it once and do the upward walk per path in
-   an Arrow-vectorized batch.  O(depth) dict probes per path, no shuffle,
-   no explode factor.  This is the 100 TB fast path.
+1. **Broadcast dict + pandas UDF** (`owner_col`) — broadcast the map once
+   and do the same upward walk per path in an Arrow-vectorized batch.
 2. **Pure-DataFrame longest-prefix join** (`owner_join`) — explode each path
    into its ancestor prefixes, broadcast-join against the dimension, keep the
    longest matching prefix per path.  Fully declarative (Catalyst prunes and
-   broadcasts), kept as the semantics oracle for strategy 1 and for the case
-   of an owner dimension too large to broadcast.
+   broadcasts), kept as the semantics oracle for ``find_owner`` and for the
+   case of an owner dimension too large to broadcast.
 """
 
 from __future__ import annotations
@@ -69,7 +71,7 @@ def find_owner(path: bytes | None, owners: dict[bytes, str]) -> str | None:
 
 def owner_col(spark: SparkSession, path: Column, owners: dict[bytes, str]) -> Column:
     """Ancestor-walk owner lookup as a vectorized pandas UDF over a broadcast
-    of the (small) owner map — the scale fast path."""
+    of the (small) owner map."""
     if not owners:
         return F.lit(None).cast(StringType())
     bc = spark.sparkContext.broadcast(owners)

@@ -17,9 +17,11 @@ for a dot; return everything after it.  Consequences we reproduce exactly:
   yields nonsense like "/a.dir/noext" → "dir/noext";
 * no dot anywhere → None.
 
-These run as vectorized pandas UDFs in the crawl pipeline (Arrow batches,
-not row-at-a-time Python), and `extension_sql_case` in plans/ mirrors the
-same semantics as a pure Catalyst expression for clean-ASCII paths.
+Both crawls call ``find_extension`` inside the walker kernel, on the path
+bytes it already holds (``crawl.walker``).  ``extension_col`` wraps it as a
+vectorized pandas UDF column for ad-hoc DataFrames of paths, and
+`extension_sql_case` in plans/ mirrors the same semantics as a pure
+Catalyst expression for clean-ASCII paths.
 """
 
 from __future__ import annotations
@@ -63,20 +65,10 @@ def extension_udf(paths: pd.Series) -> pd.Series:
     return paths.map(lambda p: find_extension(p, 6))
 
 
-def extension_col(path: Column, extension_length: int = 6) -> Column:
-    """Extension as a Column (Arrow-vectorized pandas UDF over binary paths)."""
-    if extension_length == 6:
-        return extension_udf(path)
-
-    @F.pandas_udf(BinaryType())
-    def _udf(paths: pd.Series) -> pd.Series:
-        return paths.map(lambda p: find_extension(p, extension_length))
-
-    return _udf(path)
-
-
-# Back-compat alias used by the crawl pipeline.
-extension_bytes = extension_col
+def extension_col(path: Column) -> Column:
+    """Extension as a Column (Arrow-vectorized pandas UDF over binary paths,
+    the default extension length of 6)."""
+    return extension_udf(path)
 
 
 @F.pandas_udf(StringType())

@@ -38,7 +38,9 @@ Reference parity: one row per entry — files, dirs, symlinks (storcrawl.py:473)
 ``lstat`` never follows symlinks (storcrawl.py:434); excluded dir names are
 emitted but not descended (storcrawl.py:466-473); lstat failure yields NULL
 stat columns + ``error`` (the reference's stale-struct defect, fixed —
-storcrawl.py:427-440).  Schema is the crawl plane's ENTRY_SCHEMA, so
+storcrawl.py:427-440).  Rows come from the crawl walker's row builders
+(``walker.lstat_row`` / ``walker.dir_entry_row``), so both planes stat an
+entry the same way.  Schema is the crawl plane's ENTRY_SCHEMA, so
 ``functions.paths.extension_col`` / ``owners.owner_col`` compose on top
 unchanged.
 """
@@ -63,28 +65,13 @@ from pyspark.sql.datasource import (
     LessThan,
     LessThanOrEqual,
 )
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
+from storage_crawler_spark.crawl.walker import dir_entry_row, lstat_row
 from storage_crawler_spark.schemas import ENTRY_SCHEMA
 
-_ARROW_SCHEMA = pa.schema(
-    [
-        pa.field("path", pa.binary(), nullable=False),
-        pa.field("is_dir", pa.bool_(), nullable=False),
-        pa.field("is_symlink", pa.bool_(), nullable=False),
-        pa.field("st_mode_int", pa.int64()),
-        pa.field("st_ino", pa.int64()),
-        pa.field("st_dev", pa.int64()),
-        pa.field("st_nlink", pa.int32()),
-        pa.field("st_uid", pa.int64()),
-        pa.field("st_gid", pa.int64()),
-        pa.field("st_size", pa.int64()),
-        pa.field("st_atime", pa.int64()),
-        pa.field("st_mtime", pa.int64()),
-        pa.field("st_ctime", pa.int64()),
-        pa.field("error", pa.string()),
-    ]
-)
+_ARROW_SCHEMA = to_arrow_schema(ENTRY_SCHEMA)
 
 _COL_IDX = {f.name: i for i, f in enumerate(ENTRY_SCHEMA.fields)}
 
@@ -108,24 +95,9 @@ class _Subtrees(InputPartition):
     stat_only: list[bytes]
 
 
-def _lstat_record(path: bytes, exclude: frozenset[bytes], descend_symlink_check: bool = True):
-    """(record_tuple, descendable) — descendable means a real, non-excluded dir."""
-    try:
-        st = os.lstat(path)
-    except OSError as exc:
-        return (path, False, False) + (None,) * 10 + (str(exc),), False
-    import stat as stat_mod
-
-    is_symlink = stat_mod.S_ISLNK(st.st_mode)
-    is_dir = stat_mod.S_ISDIR(st.st_mode)
-    rec = (
-        path, is_dir, is_symlink,
-        int(st.st_mode), int(st.st_ino), int(st.st_dev), int(st.st_nlink),
-        int(st.st_uid), int(st.st_gid), int(st.st_size),
-        int(st.st_atime), int(st.st_mtime), int(st.st_ctime), None,
-    )
-    descend = is_dir and not is_symlink and os.path.basename(path) not in exclude
-    return rec, descend
+def _descendable(row: tuple, exclude: frozenset[bytes]) -> bool:
+    """A real (lstat) directory whose name is not excluded."""
+    return row[1] and os.path.basename(row[0]) not in exclude
 
 
 class FsMetaReader(DataSourceReader):
@@ -193,7 +165,7 @@ class FsMetaReader(DataSourceReader):
         planning cost is one scandir per expanded dir, capped by
         ``max_driver_scans``.
         """
-        rec, descend = _lstat_record(self.root, self.exclude)
+        descend = _descendable(lstat_row(self.root), self.exclude)
         stat_only: list[bytes] = [self.root] if not descend else []
         frontier: list[bytes] = [self.root] if descend else []
         subtree_roots: list[bytes] = []
@@ -249,12 +221,11 @@ class FsMetaReader(DataSourceReader):
             return pa.RecordBatch.from_arrays(arrays, schema=_ARROW_SCHEMA)
 
         for p in partition.stat_only:
-            rec, _ = _lstat_record(p, self.exclude)
-            emit(rec)
+            emit(lstat_row(p))
         for root in partition.walk_roots:
-            rec, descend = _lstat_record(root, self.exclude)
+            rec = lstat_row(root)
             emit(rec)
-            stack = [root] if descend else []
+            stack = [root] if _descendable(rec, self.exclude) else []
             while stack:
                 d = stack.pop()
                 try:
@@ -263,24 +234,10 @@ class FsMetaReader(DataSourceReader):
                     continue  # reference behavior: log-and-skip (storcrawl.py:463)
                 with it:
                     for entry in it:
-                        epath = os.fsencode(entry.path)
-                        try:
-                            st = entry.stat(follow_symlinks=False)
-                            is_symlink = entry.is_symlink()
-                            is_dir = entry.is_dir(follow_symlinks=False)
-                            rec = (
-                                epath, is_dir, is_symlink,
-                                int(st.st_mode), int(st.st_ino), int(st.st_dev),
-                                int(st.st_nlink), int(st.st_uid), int(st.st_gid),
-                                int(st.st_size), int(st.st_atime), int(st.st_mtime),
-                                int(st.st_ctime), None,
-                            )
-                        except OSError as exc:
-                            is_dir = False
-                            rec = (epath, False, False) + (None,) * 10 + (str(exc),)
+                        rec = dir_entry_row(entry)
                         emit(rec)
-                        if is_dir and os.path.basename(epath) not in self.exclude:
-                            stack.append(epath)
+                        if _descendable(rec, self.exclude):
+                            stack.append(rec[0])
                         if len(buf) >= _BATCH_ROWS:
                             yield flush()
                             buf = []

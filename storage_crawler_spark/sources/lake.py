@@ -143,7 +143,7 @@ def snapshot_diff(old_files: DataFrame, new_files: DataFrame) -> DataFrame:
 
     Presence is tracked with explicit markers, not stat-column nullness:
     real crawls emit lstat-error rows whose st_* columns are all NULL
-    (walker ``_entry_record`` with ``st=None``), so a path present in both
+    (walker ``lstat_row`` on a failed lstat), so a path present in both
     snapshots with a NULL size must not read as "added".  Change detection
     is null-safe (``IS DISTINCT FROM``): NULL→value and value→NULL stat
     transitions count as "changed", NULL→NULL counts as "same".

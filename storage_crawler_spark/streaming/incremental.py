@@ -10,25 +10,23 @@ plane's rate queries run over a live incremental crawl's telemetry.
 Source: a landing directory of text files, one filesystem path per line —
 the pattern a producer (notification queue drainer, scheduled lister)
 feeds at scale; Spark's file-stream source gives exactly-once per landed
-file.  The stat/enrich stage reuses the batch crawl's Arrow kernels, so
-incremental and full crawls cannot drift semantically.
+file.  The stat stage is the walker's own row builder
+(``walker.stat_path_batches``: lstat, extension and owner in one
+``mapInPandas`` kernel), so incremental and full crawls cannot drift
+semantically.
 """
 
 from __future__ import annotations
 
 import os
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from storage_crawler_spark.config import CrawlConfig
-from storage_crawler_spark.crawl.walker import _entry_record
-from storage_crawler_spark.functions.owners import owner_col
-from storage_crawler_spark.functions.paths import extension_col, mode_bits_col
-from storage_crawler_spark.schemas import ENTRY_SCHEMA
+from storage_crawler_spark.crawl.walker import CRAWL_ROW_SCHEMA, stat_path_batches
+from storage_crawler_spark.functions.paths import mode_bits_col
 
 
 def read_path_stream(spark: SparkSession, landing_dir: str) -> DataFrame:
@@ -41,29 +39,13 @@ def read_path_stream(spark: SparkSession, landing_dir: str) -> DataFrame:
     )
 
 
-def _stat_batches(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cols = [f.name for f in ENTRY_SCHEMA.fields]
-    for pdf in pdfs:
-        recs = []
-        for raw in pdf["path"]:
-            p = bytes(raw)
-            try:
-                st = os.lstat(p)
-                recs.append(
-                    _entry_record(p, st, os.path.isdir(p) and not os.path.islink(p), os.path.islink(p), None)
-                )
-            except OSError as exc:
-                recs.append(_entry_record(p, None, False, False, str(exc)))
-        yield pd.DataFrame(recs, columns=cols)
-
-
 def stat_enrich(paths: DataFrame, config: CrawlConfig, owners: dict[bytes, str] | None = None) -> DataFrame:
-    """lstat + extension/owner/mode-bits enrichment (same kernels as the
-    batch crawl — one code path for both modes)."""
-    entries = paths.mapInPandas(_stat_batches, ENTRY_SCHEMA)
+    """lstat + extension/owner in the walker's kernel, then mode bits,
+    insert_time and the st_dev cast as Catalyst columns (the batch crawl's
+    row builder — one code path for both modes)."""
+    kernel = lambda it: stat_path_batches(it, config.extension_length, owners)  # noqa: E731
     return (
-        entries.withColumn("extension", extension_col(F.col("path"), config.extension_length))
-        .withColumn("owner", owner_col(paths.sparkSession, F.col("path"), owners or {}))
+        paths.mapInPandas(kernel, CRAWL_ROW_SCHEMA)
         .withColumn("st_mode", mode_bits_col(F.col("st_mode_int")))
         .withColumn("insert_time", F.current_timestamp())
         .withColumn("st_dev", F.col("st_dev").cast("string"))

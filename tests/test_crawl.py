@@ -98,8 +98,33 @@ def test_crawl_rows_and_semantics(spark, tree, tmp_path):
     assert "file stat rate" in status  # metric snapshot rows too
 
 
+def test_crawl_kernel_enrichment_is_exact(spark, tree, tmp_path):
+    """extension and owner come out of the walker kernel (stat_roots for
+    the root row, the frontier kernel for the rest) and equal the per-path
+    reference functions on every row, at a non-default extension length."""
+    from storage_crawler_spark.functions.owners import find_owner, parse_owners_file
+    from storage_crawler_spark.functions.paths import find_extension
+
+    owners_file = tmp_path / "owners.txt"
+    owners_file.write_text(f"alice={tree}\nbob={tree}/sub1:{tree}/link_to_dir\n")
+    owners = parse_owners_file(owners_file.read_text().splitlines())
+    res = crawl(spark, CrawlConfig(dirs=[str(tree)], owners=str(owners_file), extension_length=3))
+    by_path = {bytes(r.path): r for r in res.files.collect()}
+
+    root = bytes(tree)
+    for p in (root, root + b"/caf\xe9.dat", root + b"/link_to_file", root + b"/link_to_dir"):
+        assert p in by_path
+    for p, r in by_path.items():
+        got = bytes(r.extension) if r.extension is not None else None
+        assert got == find_extension(p, 3), p
+        assert r.owner == find_owner(p, owners), p
+    # the length bound is in force (at the default 6 this is b"tar.gz")
+    assert bytes(by_path[root + b"/deep/d1/d2/leaf.tar.gz"].extension) == b"gz"
+    assert by_path[root + b"/link_to_dir"].owner == "bob"
+
+
 def test_crawl_rates_use_their_own_stage_times(spark, tree):
-    """Walk rate over the level loop, stat rate over the enrichment stage
+    """Walk rate over the level loop, stat rate over the files stage
     (storcrawl.py:503-505); insert rate over the whole crawl."""
     res = crawl(spark, CrawlConfig(dirs=[str(tree)]))
     s = res.summary

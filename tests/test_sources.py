@@ -231,8 +231,16 @@ def test_fsmeta_matches_crawl_pipeline(spark, fsmeta_tree):
     paths = sorted(bytes(r.path) for r in rows)
 
     res = crawl(spark, CrawlConfig(dirs=[fsmeta_tree]))
-    crawl_paths = sorted(bytes(r.path) for r in res.files.collect())
-    assert paths == crawl_paths  # same entry set as the crawl plane
+    crawled = {bytes(r.path): r for r in res.files.collect()}
+    assert paths == sorted(crawled)  # same entry set as the crawl plane
+    # ...and the same record per entry: both planes build rows with the
+    # walker's row builders (st_atime left out: scanning reads dirs)
+    for r in rows:
+        c = crawled[bytes(r.path)]
+        assert int(c.st_mode, 2) == r.st_mode_int, r.path
+        assert c.st_dev == str(r.st_dev), r.path
+        for col in ("st_ino", "st_nlink", "st_uid", "st_gid", "st_size", "st_mtime", "st_ctime"):
+            assert c[col] == r[col], (r.path, col)
 
     by_path = {bytes(r.path): r for r in rows}
     snap = next(p for p in paths if p.endswith(b"/.snapshot"))

@@ -128,12 +128,14 @@ def test_incremental_crawl_epochs(spark, tmp_path):
     landing.mkdir()
     lake = str(tmp_path / "lake")
 
+    owners = {str(tree).encode(): "alice", str(f2).encode(): "bob"}
+
     (landing / "wave1.txt").write_text(f"{f1}\n")
-    q = incremental_crawl(spark, str(landing), lake, tag="inc")
+    q = incremental_crawl(spark, str(landing), lake, tag="inc", owners=owners)
     q.awaitTermination()
 
     (landing / "wave2.txt").write_text(f"{f2}\n{tmp_path}/missing\n")
-    q = incremental_crawl(spark, str(landing), lake, tag="inc")
+    q = incremental_crawl(spark, str(landing), lake, tag="inc", owners=owners)
     q.awaitTermination()
 
     files = spark.read.parquet(f"{lake}/storcrawl_inc/files")
@@ -143,6 +145,10 @@ def test_incremental_crawl_epochs(spark, tmp_path):
     assert bytes(rows[str(f2)].extension) == b"tar.gz"
     assert rows[f"{tmp_path}/missing"].error is not None
     assert rows[f"{tmp_path}/missing"].st_size is None
+    # owner: the path itself first, then its deepest mapped ancestor
+    assert rows[str(f1)].owner == "alice"
+    assert rows[str(f2)].owner == "bob"
+    assert rows[f"{tmp_path}/missing"].owner is None
 
     status = spark.read.parquet(f"{lake}/storcrawl_inc/status")
     inserts = sorted((r.id, r.value) for r in status.collect())
@@ -150,9 +156,36 @@ def test_incremental_crawl_epochs(spark, tmp_path):
     assert sum(v for _, v in inserts) == 3.0
 
     # re-running with nothing new landed appends nothing (exactly-once)
-    q = incremental_crawl(spark, str(landing), lake, tag="inc")
+    q = incremental_crawl(spark, str(landing), lake, tag="inc", owners=owners)
     q.awaitTermination()
     assert spark.read.parquet(f"{lake}/storcrawl_inc/files").count() == 3
+
+
+def test_stat_enrich_is_one_python_pass(spark, tmp_path):
+    """lstat, extension and owner run in one mapInPandas kernel: the plan
+    carries no pandas-UDF column (ArrowEvalPython) on top of it, and the
+    output columns keep their order."""
+    from storage_crawler_spark.config import CrawlConfig
+    from storage_crawler_spark.functions.owners import find_owner
+    from storage_crawler_spark.functions.paths import find_extension
+    from storage_crawler_spark.schemas import ENTRY_SCHEMA
+    from storage_crawler_spark.streaming.incremental import stat_enrich
+
+    f = tmp_path / "a.tar.gz"
+    f.write_text("abc")
+    paths = [str(f).encode(), str(tmp_path).encode() + b"/gone.txt"]
+    owners = {str(tmp_path).encode(): "alice"}
+    df = stat_enrich(spark.createDataFrame([(p,) for p in paths], "path BINARY"), CrawlConfig(), owners)
+
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInPandas") == 1
+    assert "ArrowEvalPython" not in plan
+    assert df.columns == ENTRY_SCHEMA.names + ["extension", "owner", "st_mode", "insert_time"]
+    got = {bytes(r.path): r for r in df.collect()}
+    for p in paths:
+        assert bytes(got[p].extension) == find_extension(p)
+        assert got[p].owner == find_owner(p, owners) == "alice"
+    assert got[paths[0]].st_size == 3 and got[paths[1]].error is not None
 
 
 def test_streaming_rate_anomaly_matches_batch(spark):

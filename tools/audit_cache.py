@@ -11,10 +11,13 @@ as do CTE-free cached plans in any position.  (Repro pinned in
 tests/test_round10_additions.py::
 test_cached_cte_view_inside_outer_with_is_not_replaced_probe.)
 
-For each registry entry this tool monkeypatches _persist_view to count
-persists, builds the entry, and compares against InMemoryTableScan
-occurrences in the executed plan.  Entries that persist but never scan
-cache are the bug class; they print as LOST.
+For each registry entry this tool counts every ``DataFrame.persist`` the
+builder makes (through ``_persist_view`` or on a handle), builds the entry,
+and compares the persists still live at its return against
+InMemoryTableScan occurrences in the executed plan.  Entries that persist
+but never scan cache are the bug class; they print as LOST.  Build-scoped
+persists (``_scoped_persist_view``) are checked apart: they must be
+released before the builder returns.
 """
 
 from __future__ import annotations
@@ -25,27 +28,38 @@ import sys
 sys.path.insert(0, __import__("os").path.dirname(__import__("os").path.dirname(__import__("os").path.abspath(__file__))))
 
 
+def _cached(df) -> bool:
+    level = df.storageLevel
+    return level.useMemory or level.useDisk
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.001")
     ap.add_argument("--only", default=None)
     args = ap.parse_args()
 
+    # the session's DataFrame class (pyspark.sql.DataFrame is its abstract
+    # parent; the classic class overrides persist)
+    from pyspark.sql.classic.dataframe import DataFrame
+
     from storage_crawler_spark.plans import registry
     from storage_crawler_spark.session import build_session
 
     spark = build_session(master="local[4]", shuffle_partitions=4)
 
-    persisted: list[str] = []
+    persisted: list[DataFrame] = []
     checkpointed: list[str] = []
     scoped: list[tuple[str, object]] = []
-    real_persist = registry._persist_view
+    in_scoped = [0]
+    real_df_persist = DataFrame.persist
     real_ckpt = registry._checkpoint_view
     real_scoped = registry._scoped_persist_view
 
-    def tracking_persist(df, name):
-        persisted.append(name)
-        return real_persist(df, name)
+    def tracking_df_persist(self, *args, **kwargs):
+        if not in_scoped[0]:
+            persisted.append(self)
+        return real_df_persist(self, *args, **kwargs)
 
     def tracking_ckpt(df, name):
         checkpointed.append(name)
@@ -53,13 +67,15 @@ def main() -> int:
 
     def tracking_scoped(df, name):
         scoped.append((name, df))
-        return real_scoped(df, name)
+        in_scoped[0] += 1
+        try:
+            return real_scoped(df, name)
+        finally:
+            in_scoped[0] -= 1
 
-    registry._persist_view = tracking_persist
+    DataFrame.persist = tracking_df_persist
     registry._checkpoint_view = tracking_ckpt
     registry._scoped_persist_view = tracking_scoped
-    # operator modules that imported the symbol directly
-    import storage_crawler_spark.plans.registry as _r  # noqa: F401
 
     names = list(registry.QUERIES) if not args.only else args.only.split(",")
     lost, ok, nopersist, skipped = [], [], [], []
@@ -74,10 +90,9 @@ def main() -> int:
             # build-scoped persists (scoped_persist_view contract): the
             # builder must have RELEASED them before returning — a still-
             # cached one is a leak, checked BEFORE clearCache wipes state
-            leaked = [
-                n for n, sdf in scoped
-                if sdf.storageLevel.useMemory or sdf.storageLevel.useDisk
-            ]
+            leaked = [n for n, sdf in scoped if _cached(sdf)]
+            # a persist the builder released itself is build-scoped too
+            n_persist = sum(1 for pdf in persisted if _cached(pdf))
         except Exception as exc:  # noqa: BLE001
             skipped.append((name, str(exc).splitlines()[0][:100]))
             continue
@@ -87,7 +102,7 @@ def main() -> int:
             lost.append((name, len(leaked)))
             print(f"LOST {name}: scoped persist(s) not released: {leaked}")
             continue
-        n_persist, n_imts = len(persisted), plan.count("InMemoryTableScan")
+        n_imts = plan.count("InMemoryTableScan")
         n_ckpt = len(checkpointed)
         n_rdd = plan.count("Scan ExistingRDD")
         if n_ckpt and n_rdd == 0:
@@ -97,7 +112,7 @@ def main() -> int:
             nopersist.append(name)
         elif n_persist and n_imts == 0:
             lost.append((name, n_persist))
-            print(f"LOST {name}: {n_persist} persisted view(s), 0 InMemoryTableScan")
+            print(f"LOST {name}: {n_persist} persisted relation(s), 0 InMemoryTableScan")
         else:
             ok.append((name, n_persist, n_imts))
             print(

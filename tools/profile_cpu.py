@@ -10,34 +10,13 @@ Presets: winnow, jaccard, minhash, kmeans, kcore, pq
 
 from __future__ import annotations
 
-import json
 import os
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-
-def _cpu_by_group(spark) -> dict[str, float]:
-    base = spark.sparkContext.uiWebUrl
-    app_id = spark.sparkContext.applicationId
-
-    def fetch(path: str):
-        with urllib.request.urlopen(
-            f"{base}/api/v1/applications/{app_id}{path}", timeout=30
-        ) as r:
-            return json.loads(r.read())
-
-    cpu_ns = {}
-    for st in fetch("/stages?status=complete&details=false"):
-        cpu_ns[st["stageId"]] = max(cpu_ns.get(st["stageId"], 0), st.get("executorCpuTime", 0))
-    groups: dict[str, set] = {}
-    for job in fetch("/jobs"):
-        tag = job.get("jobGroup")
-        if tag and tag.startswith("prof:"):
-            groups.setdefault(tag, set()).update(job.get("stageIds", ()))
-    return {t: sum(cpu_ns.get(s, 0) for s in sids) / 1e9 for t, sids in groups.items()}
+from bench import cpu_seconds_by_group  # noqa: E402
 
 
 def run_steps(spark, steps):
@@ -51,7 +30,7 @@ def run_steps(spark, steps):
         thunk()
         walls[label] = time.time() - t0
         sc.setLocalProperty("spark.jobGroup.id", None)
-    cpu = _cpu_by_group(spark)
+    cpu = cpu_seconds_by_group(spark, ("prof:",))
     print(f"{'step':<28} {'wall_s':>8} {'cpu_s':>8}")
     for label, _ in steps:
         print(f"{label:<28} {walls[label]:>8.2f} {cpu.get('prof:' + label, 0.0):>8.2f}")
@@ -97,7 +76,7 @@ def main() -> int:
         df.count()
         print(f"full_builder wall {time.time() - t0:.2f}")
         sc.setLocalProperty("spark.jobGroup.id", None)
-        cpu = _cpu_by_group(spark)
+        cpu = cpu_seconds_by_group(spark, ("prof:",))
         print("full_builder cpu", round(cpu.get("prof:full_builder", 0), 2))
     elif preset == "jaccard":
         from storage_crawler_spark.operators import dedup
@@ -148,7 +127,7 @@ def main() -> int:
         edges.count()
         print(f"edges total wall {time.time() - t0:.2f} (includes its own fit)")
         sc.setLocalProperty("spark.jobGroup.id", None)
-        cpu = _cpu_by_group(spark)
+        cpu = cpu_seconds_by_group(spark, ("prof:",))
         print("edges cpu", round(cpu.get("prof:edges_rest", 0), 2))
     elif preset == "pq":
         from storage_crawler_spark.operators import pq as pqm
@@ -165,7 +144,7 @@ def main() -> int:
         df.count()
         print(f"pq_topk full wall {time.time() - t0:.2f} (includes another fit)")
         sc.setLocalProperty("spark.jobGroup.id", None)
-        cpu = _cpu_by_group(spark)
+        cpu = cpu_seconds_by_group(spark, ("prof:",))
         print("pq_topk cpu", round(cpu.get("prof:pq_topk_full", 0), 2))
     else:
         print(f"unknown preset {preset}", file=sys.stderr)
