@@ -141,8 +141,10 @@ def inertia(vectors: DataFrame, centroids: list[list[float]]) -> float:
 
 
 def load_vectors(spark, sf_dir: str) -> DataFrame:
+    from storage_crawler_spark.plans.views import read_parquet
+
     return (
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+        read_parquet(spark, f"{sf_dir}/embeddings.parquet")
         .select(
             "vec_id",
             "label",

@@ -425,23 +425,6 @@ def _fsmeta_names(listing: DataFrame) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-def _parquet_row_count(path: str) -> int:
-    """Exact row count from parquet footers — a driver-side metadata read
-    (no Spark job), for single files or directories of part files.  Used as
-    a strategy gate, where a full count() job would cost a scan."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    if os.path.isdir(path):
-        return sum(
-            pq.read_metadata(os.path.join(path, f)).num_rows
-            for f in os.listdir(path)
-            if f.endswith(".parquet")
-        )
-    return pq.read_metadata(path).num_rows
-
-
 def _b_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     V.register_base_tables(spark, sf_dir, ("documents",))
     # Spread the *input* before the tokenize/md5 prep runs: both the
@@ -465,7 +448,7 @@ def _b_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (lang, rank-chunk) with reduceat-vectorized intersection counts —
     # measured wall 3.6→2.5 s min AND JVM CPU 14.9→2.4 at sf0.1, pair set
     # bit-identical (parity test + oracle).
-    if _parquet_row_count(f"{sf_dir}/documents.parquet") < 1_000_000:
+    if V.parquet_row_count(f"{sf_dir}/documents.parquet") < 1_000_000:
         fastpath.jaccard_prep(docs).createOrReplaceTempView("_jaccard_prep")
         ranked = spark.sql(dedup.gen_jaccard_ranked(SPARK, "_jaccard_prep", src="documents"))
     else:

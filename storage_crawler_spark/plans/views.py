@@ -13,13 +13,19 @@ and the DuckDB CTE — derivation drift between engines is impossible.
 units).  Path shapes are chosen to exercise every find_extension edge:
 dotless names, multi-dot tails, >6-char extensions (tail-scan miss →
 fall-through), and dotted directory components.
+
+This module is also the package's one parquet-footer reader: base-table
+schemas and row counts are read from footers on the driver, so registering
+a table runs no Spark job.
 """
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, TimestampNTZType
+from pyspark.sql.types import ArrayType, DataType, LongType, MapType, StructField, StructType, TimestampNTZType
 
 # -- extension, as the reference computes it (storcrawl.py:259-268), for
 # clean-ASCII paths, in the common dialect.  The negative scan covers the
@@ -134,8 +140,72 @@ def normalize_events_ts(events: DataFrame) -> DataFrame:
     return events
 
 
+def _parquet_files(path: str) -> list[str]:
+    """A parquet table's data files in sorted order: ``path`` itself, or a
+    directory's part files (``_``- and ``.``-prefixed names skipped, as
+    Spark's file listing skips them)."""
+    if not os.path.isdir(path):
+        return [path]
+    return [os.path.join(path, f) for f in sorted(os.listdir(path)) if not f.startswith(("_", "."))]
+
+
+def parquet_row_count(path: str) -> int:
+    """Exact row count from parquet footers — a driver-side metadata read
+    (no Spark job), for single files or directories of part files.  Used as
+    a strategy gate, where a full count() job would cost a scan."""
+    import pyarrow.parquet as pq
+
+    return sum(pq.read_metadata(f).num_rows for f in _parquet_files(path))
+
+
+def _nullable(dt: DataType) -> DataType:
+    """``dt`` with every field, element and value nullable, as Spark's file
+    sources read any schema."""
+    if isinstance(dt, StructType):
+        return StructType([StructField(f.name, _nullable(f.dataType)) for f in dt])
+    if isinstance(dt, ArrayType):
+        return ArrayType(_nullable(dt.elementType))
+    if isinstance(dt, MapType):
+        return MapType(_nullable(dt.keyType), _nullable(dt.valueType))
+    return dt
+
+
+def parquet_schema(path: str) -> StructType:
+    """The schema ``spark.read.parquet(path)`` infers under ``nanosAsLong``,
+    read from a parquet footer on the driver — no Spark job.
+
+    Non-merging inference reads the footer of the first data file, so this
+    reads that one.  Unzoned micro/millisecond timestamps map to
+    TIMESTAMP_NTZ (Spark's ``inferTimestampNTZ`` default), top-level
+    nanosecond timestamps to LONG, and every field is nullable.
+    """
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    arrow = pq.read_schema(_parquet_files(path)[0])
+    arrow = pa.schema(
+        [f.with_type(pa.int64()) if pa.types.is_timestamp(f.type) and f.type.unit == "ns" else f for f in arrow]
+    )
+    return _nullable(from_arrow_schema(arrow, prefer_timestamp_ntz=True))
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema given from the footer
+    (:func:`parquet_schema`), so no schema-inference job runs."""
+    return spark.read.schema(parquet_schema(path)).parquet(path)
+
+
 def register_base_tables(spark: SparkSession, sf_dir: str, tables: tuple[str, ...] = BASE_TABLES) -> None:
     """Register the driver parquet tables as temp views (idempotent).
+
+    Each table's schema comes from its parquet footer
+    (:func:`parquet_schema`), read on the driver, so registering runs no
+    Spark job (a bare ``spark.read.parquet`` runs one inference job per
+    table).  The footer is read again on every call, never cached: a file
+    rewritten in place with another schema would otherwise be scanned with
+    the stale one, and Spark returns NULL for the columns that no longer
+    match, without an error.
 
     ``events.ts`` is normalized to TIMESTAMP via :func:`normalize_events_ts`
     (schema-adaptive: LONG nanos or TIMESTAMP/NTZ micros) so second-level
@@ -147,7 +217,7 @@ def register_base_tables(spark: SparkSession, sf_dir: str, tables: tuple[str, ..
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     for name in tables:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
         if name == "events":
             df = normalize_events_ts(df)
         df.createOrReplaceTempView(name)

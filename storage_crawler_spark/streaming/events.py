@@ -40,14 +40,13 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     derive the second-floor epoch and TIMESTAMP the window/session operators
     and the batch/oracle side (``Dialect.epoch_s_events``) agree on.
     """
-    from storage_crawler_spark.plans.views import normalize_events_ts
+    from storage_crawler_spark.plans.views import normalize_events_ts, parquet_schema
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     # file-stream sources take a directory; glob-filter to the events table
     stream = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(parquet_schema(f"{sf_dir}/events.parquet"))
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
