@@ -96,25 +96,13 @@ class CrawlConfig:
     exclude: list[str] = field(default_factory=lambda: [".snapshot"])
     extension_length: int = 6  # storcrawl.py:27
     walkers: int = 4  # storcrawl.py:41
-    # Loop safety bound against pathological nesting (bind-mount loops;
-    # symlinks are never followed).  Raised from 512 in r14: deep-chain
-    # frontiers batch ~deep_batch_levels levels per Spark job, so even the
-    # bound's worst case is ~2*max_depth/deep_batch_levels driver jobs,
-    # and the OS itself walls absolute paths at PATH_MAX (~4096 bytes,
-    # ~2000 levels of 1-char names) long before this bound.
-    max_depth: int = 65536
     # In-task descent for chain-shaped frontiers (r14): when a frontier
     # holds fewer dirs than the parallelism, each task walks up to
-    # deep_batch_levels levels locally (capped at deep_dir_budget adopted
-    # dirs) instead of paying a driver round-trip per level.  1 disables.
-    # 256 (up from the initial 64): the per-batch driver cost is ~1.6 s
-    # (checkpoint + frontier count + Python-worker spin-up), so a
-    # PATH_MAX-deep chain (~2048 levels) pays 8 round-trips instead of
-    # 32; the worst case a wider budget adds is deep_dir_budget SERIAL
-    # scandir calls inside one task — work that had no parallelism to
-    # lose (one dir per level) and costs ~µs per call.
+    # deep_batch_levels levels locally (capped at walker.DIR_BUDGET adopted
+    # dirs) instead of paying a driver round-trip per level.  1 disables
+    # it (strict per-level BFS).  256: a PATH_MAX-deep chain (~2048
+    # levels) pays 8 round-trips instead of 64's 32.
     deep_batch_levels: int = 256
-    deep_dir_budget: int = 256
     # Rotating-file crawl log (the reference derives logfile from the tag,
     # storcrawl.py:60; here it is opt-in).  None disables file logging.
     logfile: str | None = None

@@ -45,12 +45,12 @@ def make_crawl_logger(
 
 
 def log_status_events(
-    logger: logging.Logger, events: list[tuple[str, float | None, str | None]]
+    logger: logging.Logger, events: list[tuple[float, str, float | None, str | None]]
 ) -> None:
-    """Render crawl status rows as log lines (events at INFO; metric
-    snapshots include value+units, matching the reference's status
-    vocabulary)."""
-    for status, value, units in events:
+    """Render crawl status events ``(time, status, value, units)`` as log
+    lines (events at INFO; metric snapshots include value+units, matching
+    the reference's status vocabulary)."""
+    for _, status, value, units in events:
         if value is None:
             logger.info("%s", status)
         else:

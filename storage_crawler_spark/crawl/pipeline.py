@@ -6,12 +6,17 @@ status events and the counter snapshot metrics (storcrawl.py:491-528) are
 written to the normalized status table; the summary aggregate
 (storcrawl.py:641) is a single count/sum pass via ``observe`` so it costs no
 extra job.
+
+Every writer of a crawl table (this crawl, the incremental crawl, the
+streaming listener) builds its rows with :func:`files_rows` and
+:func:`status_rows`, so each table has one shape.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
 import json
+import os
 import time as _time
 from dataclasses import dataclass, field
 
@@ -22,20 +27,11 @@ from storage_crawler_spark.config import CrawlConfig
 from storage_crawler_spark.crawl.walker import expand_level, stat_roots
 from storage_crawler_spark.functions.owners import parse_owners_file
 from storage_crawler_spark.functions.paths import mode_bits_col
-from storage_crawler_spark.schemas import STATUS_SCHEMA
+from storage_crawler_spark.schemas import FILES_SCHEMA, STATUS_SCHEMA
 
-# Lifecycle events of the reference crawl (storcrawl.py:575-629).
-EVENTS = (
-    "begin",
-    "walker started",
-    "stater started",
-    "dbproc started",
-    "all processes spawned",
-    "processed all dirs",
-    "processed all files",
-    "processed all DB commits",
-    "end",
-)
+# Loop guard against pathological nesting (bind-mount loops; symlinks are
+# never followed); PATH_MAX (~2000 levels of 1-char names) binds first.
+MAX_DEPTH = 65536
 
 
 @dataclass
@@ -45,21 +41,34 @@ class CrawlResult:
     summary: dict = field(default_factory=dict)
 
 
-def _status_rows(events: list[tuple[str, float | None, str | None]]):
-    now = _dt.datetime.now(tz=_dt.timezone.utc)
-    rows = []
-    for i, (status, value, units) in enumerate(events):
-        rows.append(
-            (
-                i,
-                now,
-                status,
-                value,
-                units,
-                json.dumps({"time": now.timestamp(), "status": status, "value": value, "units": units}),
-            )
-        )
-    return rows
+def files_rows(entries: DataFrame) -> DataFrame:
+    """Walker rows (``walker.CRAWL_ROW_SCHEMA``) → ``FILES_SCHEMA`` rows: mode
+    bits, an ``id`` unique within one write, ``insert_time`` and ``st_dev``
+    as text.  A failed lstat shows as NULL stat columns.  Batch-only
+    (``monotonically_increasing_id``): the incremental crawl calls it on
+    each micro-batch."""
+    return entries.withColumns(
+        {
+            "id": F.monotonically_increasing_id(),
+            "insert_time": F.current_timestamp(),
+            "st_mode": mode_bits_col(F.col("st_mode_int")),
+            "st_dev": F.col("st_dev").cast("string"),
+        }
+    ).select(FILES_SCHEMA.fieldNames())
+
+
+def status_rows(
+    spark: SparkSession, events: list[tuple[float, str, float | None, str | None]]
+) -> DataFrame:
+    """``(time, status, value, units)`` events, time in epoch seconds, →
+    ``STATUS_SCHEMA`` rows: ids from 0 in list order (``lake.append_status``
+    shifts them past a tag's ids) and the raw event as the JSON ``entry``."""
+    rows = [
+        (i, _dt.datetime.fromtimestamp(t, tz=_dt.timezone.utc), status, value, units,
+         json.dumps({"time": t, "status": status, "value": value, "units": units}))
+        for i, (t, status, value, units) in enumerate(events)
+    ]
+    return spark.createDataFrame(rows, STATUS_SCHEMA)
 
 
 def _materialize(spark: SparkSession, df: DataFrame, config: CrawlConfig, name: str) -> DataFrame:
@@ -71,8 +80,6 @@ def _materialize(spark: SparkSession, df: DataFrame, config: CrawlConfig, name: 
     executor-loss-safe, and each level doubles as a resumable artifact.
     """
     if config.level_store:
-        import os
-
         path = os.path.join(config.level_store, name)
         df.write.mode("overwrite").parquet(path)
         return spark.read.parquet(path)
@@ -84,10 +91,15 @@ def crawl(spark: SparkSession, config: CrawlConfig) -> CrawlResult:
 
     The files DataFrame carries the full reference column set (§1.2):
     id, insert_time, path, extension, st_mode (bit-string), st_* fields,
-    owner.  Persist with ``files.write.parquet(...)`` or the JDBC sink.
+    owner.  Persist with ``sources.write_crawl`` or the JDBC sink.
     """
     t0 = _time.time()
-    status_log: list[tuple[str, float | None, str | None]] = [("begin", None, "event")]
+    status_log: list[tuple[float, str, float | None, str | None]] = []
+
+    def event(status: str, value: float | None = None, units: str = "event") -> None:
+        status_log.append((_time.time(), status, value, units))
+
+    event("begin")
 
     owners = {}
     if config.owners:
@@ -99,18 +111,19 @@ def crawl(spark: SparkSession, config: CrawlConfig) -> CrawlResult:
     parallelism = max(config.walkers, spark.sparkContext.defaultParallelism)
 
     for ev in ("walker started", "stater started", "dbproc started", "all processes spawned"):
-        status_log.append((ev, None, "event"))
+        event(ev)
 
     # --- frontier loop -----------------------------------------------------
     # ``descend`` (is_dir AND not excluded) drives the frontier; the emitted
-    # is_dir column stays the real lstat answer for excluded dirs too.
+    # is_dir column stays the real lstat answer for excluded dirs too.  The
+    # frontier sizes cost no job: the roots are counted on the driver, and
+    # each level's next frontier by an Observation on its materialize job.
     t_walk = _time.time()
-    entries = stat_roots(spark, roots, config.extension_length, owners)
+    entries, dir_total = stat_roots(spark, roots, config.extension_length, owners)
     frontier = entries.filter(F.col("descend")).select("path")
     levels = [entries.drop("descend")]
     depth = 0
-    dir_total = frontier.count()
-    while dir_total > 0 and depth < config.max_depth:
+    while dir_total > 0 and depth < MAX_DEPTH:
         # Chain-shaped frontier (fewer dirs than workers): descend up to
         # deep_batch_levels levels inside the tasks — a 10k-deep chain
         # costs ~10k/deep_batch_levels driver round-trips instead of 10k
@@ -120,21 +133,22 @@ def crawl(spark: SparkSession, config: CrawlConfig) -> CrawlResult:
         # deepest level actually walked by up to k-1 in the final batch.
         k = 1
         if dir_total < parallelism and config.deep_batch_levels > 1:
-            k = max(1, min(config.deep_batch_levels, config.max_depth - depth))
+            k = max(1, min(config.deep_batch_levels, MAX_DEPTH - depth))
         level = expand_level(
             frontier, exclude, parallelism,
-            levels_per_job=k, dir_budget=config.deep_dir_budget,
-            extension_length=config.extension_length, owners=owners,
+            levels_per_job=k, extension_length=config.extension_length, owners=owners,
         )
         # Flatten lineage: each level's plan is materialized so a deep tree
         # doesn't nest N mapInPandas stages into one giant plan.
+        obs = Observation()
+        level = level.observe(obs, F.count_if(F.col("descend")).alias("dirs"))
         level = _materialize(spark, level, config, f"level_{depth:05d}")
         levels.append(level.drop("descend"))
         frontier = level.filter(F.col("descend")).select("path")
-        dir_total = frontier.count()
+        dir_total = obs.get["dirs"]
         depth += k
     walk_sec = max(_time.time() - t_walk, 1e-9)
-    status_log.append(("processed all dirs", None, "event"))
+    event("processed all dirs")
 
     all_entries = levels[0]
     for lv in levels[1:]:
@@ -144,41 +158,18 @@ def crawl(spark: SparkSession, config: CrawlConfig) -> CrawlResult:
     # out of the walker kernel) ----------------------------------------------
     t_stat = _time.time()
     obs = Observation("crawl")
-    enriched = (
-        all_entries.withColumn("st_mode", mode_bits_col(F.col("st_mode_int")))
-        .withColumn("id", F.monotonically_increasing_id())
-        .withColumn("insert_time", F.current_timestamp())
-        .withColumn("st_dev", F.col("st_dev").cast("string"))
-    )
-    enriched = enriched.observe(
+    observed = all_entries.observe(
         obs,
         F.count(F.lit(1)).alias("file_count"),
         F.sum(F.col("st_size")).alias("total_size"),
-        F.sum(F.when(F.col("is_dir") | F.col("st_mode_int").bitwiseAND(0o170000).eqNullSafe(0o040000), 1).otherwise(0)).alias("dir_count"),
+        F.count_if(F.col("is_dir")).alias("dir_count"),
     )
-    files = enriched.select(
-        "id",
-        "insert_time",
-        "path",
-        "extension",
-        "st_mode",
-        "st_ino",
-        "st_dev",
-        "st_nlink",
-        "st_uid",
-        "st_gid",
-        "st_size",
-        "st_atime",
-        "st_mtime",
-        "st_ctime",
-        "owner",
-    )
-    status_log.append(("processed all files", None, "event"))
+    event("processed all files")
 
     # Materialize once so counters are real and downstream reads are cheap.
-    files = _materialize(spark, files, config, "files_stage")
+    files = _materialize(spark, files_rows(observed), config, "files_stage")
     stat_sec = max(_time.time() - t_stat, 1e-9)
-    status_log.append(("processed all DB commits", None, "event"))
+    event("processed all DB commits")
 
     elapsed = max(_time.time() - t0, 1e-9)
     got = obs.get
@@ -193,24 +184,19 @@ def crawl(spark: SparkSession, config: CrawlConfig) -> CrawlResult:
     # "file stat rate" times only the files_stage materialize (mode bits, id,
     # insert_time), the stage that stands where the reference's stater pool
     # does.
-    status_log.extend(
-        [
-            ("files stated", float(file_count), "files"),
-            ("total files", float(file_count), "files"),
-            ("file metadata inserts", float(file_count), "inserts"),
-            ("file stat rate", file_count / stat_sec, "files/sec"),
-            ("file walk rate", file_count / walk_sec, "entries/sec"),
-            ("insert rate", file_count / elapsed, "inserts/sec"),
-        ]
-    )
-    status_log.append(("end", None, "event"))
+    event("files stated", float(file_count), "files")
+    event("total files", float(file_count), "files")
+    event("file metadata inserts", float(file_count), "inserts")
+    event("file stat rate", file_count / stat_sec, "files/sec")
+    event("file walk rate", file_count / walk_sec, "entries/sec")
+    event("insert rate", file_count / elapsed, "inserts/sec")
+    event("end")
 
     if config.logfile:
         from storage_crawler_spark.crawl.logsink import log_status_events, make_crawl_logger
 
         log_status_events(make_crawl_logger(config.logfile), status_log)
 
-    status = spark.createDataFrame(_status_rows(status_log), STATUS_SCHEMA)
     summary = {
         "files": file_count,
         "dirs": dir_count,
@@ -220,4 +206,4 @@ def crawl(spark: SparkSession, config: CrawlConfig) -> CrawlResult:
         "stat_sec": stat_sec,
         "depth": depth,
     }
-    return CrawlResult(files=files, status=status, summary=summary)
+    return CrawlResult(files=files, status=status_rows(spark, status_log), summary=summary)

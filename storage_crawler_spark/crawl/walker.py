@@ -30,7 +30,7 @@ Scale properties:
   scandir streams and yields Arrow batches incrementally (no per-dir
   materialization of the full child list beyond the batch).
 - no driver round-trip of row data: entries stay in executors; the driver
-  only sees per-level counts (Spark actions), never paths.
+  only sees per-level counts (observed on the level's own job), never paths.
 - lineage: each level is localCheckpoint()ed to keep the plan tree flat
   (a depth-30 tree would otherwise nest 30 unions of mapInPandas plans).
 - the owner map is small (thousands of dirs) and travels in the kernel's
@@ -45,7 +45,8 @@ Semantics preserved from the reference:
 
 Deliberately fixed defect: on lstat failure the reference silently reuses
 the previous record's stat struct (storcrawl.py:427-440); we emit NULL stat
-columns plus an ``error`` string instead.
+columns instead.  The ``error`` string lives in ENTRY rows (fsmeta), not in
+the crawls' ``files`` table.
 """
 
 from __future__ import annotations
@@ -65,6 +66,10 @@ from storage_crawler_spark.functions.paths import find_extension
 from storage_crawler_spark.schemas import ENTRY_SCHEMA
 
 _BATCH_ROWS = 8192
+
+# The most dirs one task adopts beyond its frontier dirs in deep mode (see
+# scan_frontier_batches); equal to the default deep_batch_levels.
+DIR_BUDGET = 256
 
 # ENTRY_SCHEMA + the two path-derived columns both crawls emit.
 # (Built as fresh StructTypes: StructType.add mutates in place.)
@@ -134,7 +139,6 @@ def scan_frontier_batches(
     dir_paths: Iterator[pd.DataFrame],
     exclude_names: frozenset[bytes],
     levels_per_job: int = 1,
-    dir_budget: int = 64,
     extension_length: int = 6,
     owners: dict[bytes, str] | None = None,
 ) -> Iterator[pd.DataFrame]:
@@ -148,17 +152,17 @@ def scan_frontier_batches(
 
     ``levels_per_job`` > 1 engages IN-TASK descent (r14, the deep-chain
     fix): a chain-shaped tree puts ONE directory in each frontier, so the
-    per-level driver round-trip (checkpoint + count ≈ two Spark jobs)
+    per-level driver round-trip (shuffle + materialize ≈ two Spark jobs)
     dominates a 10k-deep crawl by ~10,000×.  With k levels per job the
     task keeps a local BFS deque of (dir, rel_depth): a descendable child
     at rel depth < k is scanned in the SAME task (its row is emitted with
     descend=false — the driver must not re-scan it), while a child AT
     rel depth k is handed back with descend=true as next frontier.
-    ``dir_budget`` caps how many EXTRA directories one task adopts
+    :data:`DIR_BUDGET` caps how many EXTRA directories one task adopts
     in-task (frontier dirs are driver-routed work and don't count), so a
     frontier that suddenly WIDENS (one dir fanning out to 100k) hands the
     fan-out back to the driver for repartitioning instead of serializing
-    the subtree into one task — deep mode costs at most ``dir_budget``
+    the subtree into one task — deep mode costs at most ``DIR_BUDGET``
     serial scandir calls where there was nothing to parallelize anyway.
     Routing is decided at enqueue time, so every emitted row's descend
     flag is final.
@@ -170,7 +174,7 @@ def scan_frontier_batches(
         queue: deque[tuple[bytes, int]] = deque(
             (bytes(raw), 0) for raw in pdf["path"]
         )
-        extra = 0  # in-task-adopted dirs, capped by dir_budget
+        extra = 0  # in-task-adopted dirs, capped by DIR_BUDGET
         while queue:
             d, rel = queue.popleft()
             try:
@@ -184,7 +188,7 @@ def scan_frontier_batches(
                 for entry in it:
                     row = dir_entry_row(entry)
                     descend = row[1] and entry.name not in exclude_names
-                    if descend and rel + 1 < levels_per_job and extra < dir_budget:
+                    if descend and rel + 1 < levels_per_job and extra < DIR_BUDGET:
                         queue.append((row[0], rel + 1))
                         extra += 1
                         descend = False  # handled in-task; driver must not re-scan
@@ -201,7 +205,6 @@ def expand_level(
     exclude_names: frozenset[bytes],
     parallelism: int,
     levels_per_job: int = 1,
-    dir_budget: int = 64,
     extension_length: int = 6,
     owners: dict[bytes, str] | None = None,
 ) -> DataFrame:
@@ -210,24 +213,25 @@ def expand_level(
     (deep-chain mode — see :func:`scan_frontier_batches`)."""
     n = max(1, parallelism)
     kernel = lambda it: scan_frontier_batches(  # noqa: E731
-        it, exclude_names, levels_per_job, dir_budget, extension_length, owners
+        it, exclude_names, levels_per_job, extension_length, owners
     )
     return frontier.repartition(n, F.col("path")).mapInPandas(kernel, CRAWL_DESCEND_SCHEMA)
 
 
 def stat_roots(
     spark, roots: list[bytes], extension_length: int = 6, owners: dict[bytes, str] | None = None
-) -> DataFrame:
+) -> tuple[DataFrame, int]:
     """Stat the crawl roots themselves (the reference seeds roots into the
     dir queue, so root dirs appear as rows too once their parent is scanned —
     but roots have no parent in the crawl, so we stat them explicitly).
     Roots are always descended when they are real dirs: the reference's
-    exclusion check applies to dirs FOUND during the walk, not to seeds."""
+    exclusion check applies to dirs FOUND during the walk, not to seeds.
+    Also returns how many roots descend, so no job counts them."""
     recs = []
     for r in roots:
         row = lstat_row(r)
         recs.append(_enrich(row, extension_length, owners) + (row[1],))
-    return spark.createDataFrame(recs, CRAWL_DESCEND_SCHEMA)
+    return spark.createDataFrame(recs, CRAWL_DESCEND_SCHEMA), sum(rec[-1] for rec in recs)
 
 
 def stat_path_batches(

@@ -80,12 +80,6 @@ def lattice_parts(spark, n_rows: int) -> int:
     return max(1, min(spark.sparkContext.defaultParallelism, want))
 
 
-def _md5_48(data: bytes) -> int:
-    """First 48 bits of md5 as a non-negative int — identical to the SQL
-    ``hex12_to_bigint(substr(md5_utf8(s), 1, 12))`` construction."""
-    return int.from_bytes(hashlib.md5(data).digest()[:6], "big")
-
-
 def _winnow_batches(k: int, w: int):
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         md5 = hashlib.md5

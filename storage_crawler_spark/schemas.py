@@ -76,12 +76,3 @@ STATUS_SCHEMA = T.StructType(
         T.StructField("entry", T.StringType(), True),
     ]
 )
-
-# Owner dimension parsed from the `owner=dir1:dir2:...` map file
-# (storcrawl.py:219-242).
-OWNERS_SCHEMA = T.StructType(
-    [
-        T.StructField("dir", T.BinaryType(), False),
-        T.StructField("owner", T.StringType(), False),
-    ]
-)

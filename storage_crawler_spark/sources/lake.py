@@ -17,8 +17,9 @@ Scale design (the 100 TB shape):
   skewed trees (one huge partition per heavy top-level dir, thousands of
   tiny ones elsewhere).
 - **Append-only status**: each crawl/report run appends normalized metric
-  rows; readers aggregate (latest-per-key via window, B8) instead of
-  updating in place.
+  rows through :func:`append_status`, which continues the tag's ``id``
+  sequence as the reference's SERIAL key does; readers aggregate
+  (latest-per-key by max id, B8) instead of updating in place.
 - ``drop_tag`` + overwrite mode reproduce the reference's destructive
   re-create semantics (DROP SCHEMA … CASCADE, storcrawl.py:97-131).
 """
@@ -29,8 +30,10 @@ import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from storage_crawler_spark.crawl.pipeline import CrawlResult
+from storage_crawler_spark.schemas import STATUS_SCHEMA
 
 
 def _tag_dir(root: str, tag: str) -> str:
@@ -50,7 +53,7 @@ def write_crawl(
     the session's shuffle parallelism.  Returns the tag directory.
     """
     tag_dir = _tag_dir(root, tag)
-    files, status = result.files, result.status
+    files = result.files
     n = target_partitions or files.sparkSession.conf.get("spark.sql.shuffle.partitions")
     (
         files.repartitionByRange(int(n), "path")
@@ -58,8 +61,22 @@ def write_crawl(
         .write.mode(mode)
         .parquet(os.path.join(tag_dir, "files"))
     )
-    status.write.mode("append").parquet(os.path.join(tag_dir, "status"))
+    append_status(result.status, root, tag)
     return tag_dir
+
+
+def append_status(status: DataFrame, root: str, tag: str = "crawl") -> None:
+    """Append STATUS_SCHEMA rows to a tag's ``status`` with ``id`` shifted
+    past the largest id there, as the reference's SERIAL continues (the
+    latest-per-status report keys on it).  A new table costs no Spark job.
+    Appends do not coordinate: one writer per tag at a time."""
+    path = os.path.join(_tag_dir(root, tag), "status")
+    if os.path.isdir(path):
+        spark = status.sparkSession
+        top = spark.read.schema(STATUS_SCHEMA).parquet(path).agg(F.max("id")).first()[0]
+        if top is not None:
+            status = status.withColumn("id", F.col("id") + (top + 1))
+    status.write.mode("append").parquet(path)
 
 
 def write_bucketed(
@@ -106,8 +123,6 @@ def merge_snapshot(old_files: DataFrame, new_files: DataFrame, recrawled_roots: 
     ``new_files``; out-of-scope rows in new_files are rejected loudly rather
     than silently merged.
     """
-    from pyspark.sql import functions as F
-
     def under_any_root(col):
         # binary-safe prefix test (Column.startswith is string-only)
         preds = []
@@ -148,8 +163,6 @@ def snapshot_diff(old_files: DataFrame, new_files: DataFrame) -> DataFrame:
     is null-safe (``IS DISTINCT FROM``): NULL→value and value→NULL stat
     transitions count as "changed", NULL→NULL counts as "same".
     """
-    from pyspark.sql import functions as F
-
     o = old_files.select(
         F.col("path"),
         F.col("st_size").alias("old_size"),

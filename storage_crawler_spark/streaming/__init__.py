@@ -12,8 +12,9 @@ This package re-expresses those semantics on Spark Structured Streaming:
 - :mod:`stateful` — ``applyInPandasWithState`` per-key delta/rate operator
   (the reference's rate derivation, storcrawl.py:503-505, as a stateful
   streaming op);
-- :mod:`listener` — ``StreamingQueryListener`` that normalizes progress
-  events into the reference's status-table vocabulary (storcrawl.py:494-521).
+- :mod:`listener` — ``StreamingQueryListener`` that turns progress events
+  into status rows of the crawl's own shape, in the reference's status
+  vocabulary (storcrawl.py:494-521).
 """
 
 from storage_crawler_spark.streaming.events import (

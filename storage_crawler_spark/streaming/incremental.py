@@ -1,4 +1,4 @@
-"""Incremental crawl: a path stream → stat/enrich → epoch-committed lake.
+"""Incremental crawl: a path stream → lstat → epoch-committed lake.
 
 The reference's dbproc loop buffers INSERTs and commits on a wall-clock
 timer (group commit, storcrawl.py:382-391) while the status daemon appends
@@ -10,23 +10,29 @@ plane's rate queries run over a live incremental crawl's telemetry.
 Source: a landing directory of text files, one filesystem path per line —
 the pattern a producer (notification queue drainer, scheduled lister)
 feeds at scale; Spark's file-stream source gives exactly-once per landed
-file.  The stat stage is the walker's own row builder
+file.  The stat stage is the walker's own kernel
 (``walker.stat_path_batches``: lstat, extension and owner in one
-``mapInPandas`` kernel), so incremental and full crawls cannot drift
-semantically.
+``mapInPandas``), and each epoch's rows come from the batch crawl's row
+builders (``pipeline.files_rows``, ``pipeline.status_rows``), so an
+incremental tag's ``files`` and ``status`` tables have the batch crawl's
+schemas and the two modes cannot drift.  ``files`` ids are unique within
+one epoch's write; status ids continue across epochs
+(``lake.append_status``).
 """
 
 from __future__ import annotations
 
 import os
+import time as _time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from storage_crawler_spark.config import CrawlConfig
+from storage_crawler_spark.crawl.pipeline import files_rows, status_rows
 from storage_crawler_spark.crawl.walker import CRAWL_ROW_SCHEMA, stat_path_batches
-from storage_crawler_spark.functions.paths import mode_bits_col
+from storage_crawler_spark.sources.lake import append_status
 
 
 def read_path_stream(spark: SparkSession, landing_dir: str) -> DataFrame:
@@ -40,16 +46,10 @@ def read_path_stream(spark: SparkSession, landing_dir: str) -> DataFrame:
 
 
 def stat_enrich(paths: DataFrame, config: CrawlConfig, owners: dict[bytes, str] | None = None) -> DataFrame:
-    """lstat + extension/owner in the walker's kernel, then mode bits,
-    insert_time and the st_dev cast as Catalyst columns (the batch crawl's
-    row builder — one code path for both modes)."""
+    """lstat + extension/owner in the walker's kernel: CRAWL_ROW_SCHEMA rows,
+    one ``mapInPandas`` over a streaming or static ``path`` column."""
     kernel = lambda it: stat_path_batches(it, config.extension_length, owners)  # noqa: E731
-    return (
-        paths.mapInPandas(kernel, CRAWL_ROW_SCHEMA)
-        .withColumn("st_mode", mode_bits_col(F.col("st_mode_int")))
-        .withColumn("insert_time", F.current_timestamp())
-        .withColumn("st_dev", F.col("st_dev").cast("string"))
-    )
+    return paths.mapInPandas(kernel, CRAWL_ROW_SCHEMA)
 
 
 def incremental_crawl(
@@ -63,26 +63,26 @@ def incremental_crawl(
 ) -> StreamingQuery:
     """Start the incremental crawl; returns the StreamingQuery.
 
-    Each micro-batch appends to ``<lake>/storcrawl_<tag>/files`` and writes
-    one normalized status row (epoch id, rows committed) to ``.../status``
-    — the epoch is the group commit.  ``available_now=True`` drains what
-    has landed and stops (cron-style incremental); False runs continuous.
+    Each micro-batch appends its FILES_SCHEMA rows to
+    ``<lake>/storcrawl_<tag>/files`` and one ``file metadata inserts``
+    status row (rows committed) to ``.../status`` — the epoch is the group
+    commit.  The row count comes from an ``Observation`` on the files write,
+    so the lstat kernel runs once per epoch.  ``available_now=True`` drains
+    what has landed and stops (cron-style incremental); False runs
+    continuous.
     """
     cfg = config or CrawlConfig()
     tag_dir = os.path.join(lake_root, f"storcrawl_{tag}")
     files_dir = os.path.join(tag_dir, "files")
-    status_dir = os.path.join(tag_dir, "status")
     checkpoint = os.path.join(tag_dir, "_checkpoint")
 
     enriched = stat_enrich(read_path_stream(spark, landing_dir), cfg, owners)
 
     def commit_epoch(batch: DataFrame, epoch_id: int) -> None:
-        n = batch.count()
-        batch.write.mode("append").parquet(files_dir)
-        batch.sparkSession.createDataFrame(
-            [(int(epoch_id), "file metadata inserts", float(n), "inserts")],
-            "id BIGINT, status STRING, value DOUBLE, units STRING",
-        ).withColumn("time", F.current_timestamp()).write.mode("append").parquet(status_dir)
+        obs = Observation()
+        files_rows(batch).observe(obs, F.count(F.lit(1)).alias("n")).write.mode("append").parquet(files_dir)
+        event = (_time.time(), "file metadata inserts", float(obs.get["n"]), "inserts")
+        append_status(status_rows(batch.sparkSession, [event]), lake_root, tag)
 
     writer = (
         enriched.writeStream.foreachBatch(commit_epoch)

@@ -1,57 +1,63 @@
-"""Streaming progress → status-table normalization.
+"""Streaming progress → status rows.
 
 The reference runs a daemon that samples shared counters every ``--update``
 seconds and appends metric snapshots to the status table (storcrawl.py:
 491-528): ``file stat rate`` / ``file walk rate`` / ``insert rate`` plus
 queue depths.  Structured Streaming already measures the same quantities
 per micro-batch; this listener maps ``StreamingQueryProgress`` onto the
-reference's normalized status schema (SURVEY.md §1.3):
-
-    status(time TIMESTAMP-epoch-seconds BIGINT, status STRING,
-           value DOUBLE, units STRING)
-
-so the report plane's status queries (full/events/averages/brief) run
-unchanged over a live streaming job's telemetry.
+reference's status vocabulary as ``(time, status, value, units)`` events,
+and ``to_df`` builds them with the crawl's status row builder
+(``crawl.pipeline.status_rows``).  The snapshot therefore has
+``STATUS_SCHEMA`` (id, time, status, value, units, entry), the report
+plane's status queries (full/events/averages/brief) run on it unchanged,
+and ``sources.lake.append_status`` appends it to a tag with ids that
+continue the tag's own.
 """
 
 from __future__ import annotations
 
+import datetime as _dt
 import threading
+import time as _time
 from typing import TYPE_CHECKING
 
 from pyspark.sql.streaming import StreamingQueryListener
 
+from storage_crawler_spark.crawl.pipeline import status_rows
+
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import DataFrame, SparkSession
 
-STATUS_SCHEMA = "time_s BIGINT, status STRING, value DOUBLE, units STRING"
+
+def _epoch(timestamp: str) -> float:
+    """Epoch seconds of a listener event's ISO-8601 UTC stamp, e.g.
+    '2026-08-13T05:00:00.123Z'."""
+    return _dt.datetime.fromisoformat(timestamp).timestamp()
 
 
 class StatusMetricsListener(StreamingQueryListener):
-    """Collects per-batch progress as normalized status rows.
+    """Collects query lifecycle and per-batch progress as status events.
 
-    Rows accumulate in memory (driver-side, O(batches)); ``to_df`` snapshots
-    them as a DataFrame for appending to a status sink.  Thread-safe: Spark
-    invokes listeners from its own event thread.
+    Events accumulate in memory (driver-side, O(batches)); ``to_df``
+    snapshots them as a DataFrame for appending to a status sink.  Each
+    carries its event's time: the query's start stamp, each batch's
+    progress stamp, and the moment the listener hears of termination
+    (that event has no stamp).  Thread-safe: Spark invokes listeners from
+    its own event thread.
     """
 
     def __init__(self) -> None:
         self._lock = threading.Lock()
-        self.rows: list[tuple[int, str, float | None, str]] = []
+        self.rows: list[tuple[float, str, float | None, str]] = []
 
     # -- StreamingQueryListener interface ----------------------------------
     def onQueryStarted(self, event) -> None:
         with self._lock:
-            self.rows.append((0, "stream begin", None, "event"))
+            self.rows.append((_epoch(event.timestamp), "stream begin", None, "event"))
 
     def onQueryProgress(self, event) -> None:
         p = event.progress
-        # timestamp is ISO-8601 UTC, e.g. '2026-08-13T05:00:00.123Z'
-        import datetime as _dt
-
-        t = int(
-            _dt.datetime.fromisoformat(p.timestamp.replace("Z", "+00:00")).timestamp()
-        )
+        t = _epoch(p.timestamp)
         with self._lock:
             self.rows.append((t, "insert rate", float(p.processedRowsPerSecond or 0.0), "inserts/sec"))
             self.rows.append((t, "file walk rate", float(p.inputRowsPerSecond or 0.0), "entries/sec"))
@@ -59,7 +65,7 @@ class StatusMetricsListener(StreamingQueryListener):
 
     def onQueryTerminated(self, event) -> None:
         with self._lock:
-            self.rows.append((0, "stream end", None, "event"))
+            self.rows.append((_time.time(), "stream end", None, "event"))
 
     def onQueryIdle(self, event) -> None:  # pragma: no cover - timing dependent
         pass
@@ -68,4 +74,4 @@ class StatusMetricsListener(StreamingQueryListener):
     def to_df(self, spark: "SparkSession") -> "DataFrame":
         with self._lock:
             snapshot = list(self.rows)
-        return spark.createDataFrame(snapshot, STATUS_SCHEMA)
+        return status_rows(spark, snapshot)

@@ -275,3 +275,25 @@ def test_crawl_random_tree_matches_reference_walk(spark, tmp_path):
         assert r.st_size == st.st_size, p
         assert int(r.st_mode, 2) & 0o170000 == stat_mod.S_IFMT(st.st_mode), p
         assert r.st_mtime == int(st.st_mtime), p
+
+
+def test_strict_bfs_level_runs_two_jobs(spark, tmp_path):
+    """Frontier sizes cost no count job: the roots are counted on the
+    driver and each next frontier by an Observation on the level's
+    materialize job.  A two-level strict-BFS crawl runs each level's
+    shuffle and materialize jobs, plus the files stage: 5 jobs."""
+    import uuid
+
+    root = tmp_path / "two"
+    (root / "a").mkdir(parents=True)
+    (root / "a" / "f.txt").write_text("f")
+    sc = spark.sparkContext
+    group = f"crawl-{uuid.uuid4().hex}"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        res = crawl(spark, CrawlConfig(dirs=[str(root)], deep_batch_levels=1))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events arrive asynchronously
+    assert res.summary["depth"] == 2 and res.summary["files"] == 3
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2 * 2 + 1

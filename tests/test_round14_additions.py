@@ -236,7 +236,7 @@ def test_readability_mean_on_lattice():
 
 # ---------------------------------------------------------------------------
 # r14 deep-chain descent: chain-shaped frontiers batch levels in-task
-# (walker.scan_frontier_batches levels_per_job / dir_budget) — semantics
+# (walker.scan_frontier_batches levels_per_job / DIR_BUDGET) — semantics
 # must be identical to strict per-level BFS.
 # ---------------------------------------------------------------------------
 
@@ -297,7 +297,7 @@ def test_deep_chain_exclusion_still_gates_descent(spark, tmp_path):
 
 def test_deep_chain_widening_hands_fanout_back(spark, tmp_path):
     """A chain that fans out wide below must still be fully crawled: the
-    dir_budget routes the fan-out back through the driver frontier."""
+    DIR_BUDGET routes the fan-out back through the driver frontier."""
     import os
 
     from storage_crawler_spark.config import CrawlConfig
@@ -306,7 +306,7 @@ def test_deep_chain_widening_hands_fanout_back(spark, tmp_path):
     root = tmp_path / "funnel"
     root.mkdir()
     tip = _make_chain(root, 12)
-    for i in range(600):  # fan-out well past deep_dir_budget=256
+    for i in range(600):  # fan-out well past walker.DIR_BUDGET=256
         d = os.path.join(tip, f"w{i:03d}")
         os.mkdir(d)
         with open(os.path.join(d, "leaf.dat"), "wb") as fh:

@@ -55,13 +55,24 @@ def test_lake_round_trip(spark, small_tree, tmp_path):
 
 
 def test_lake_append_status(spark, small_tree, tmp_path):
+    from storage_crawler_spark.reports import status_brief
+
     lake_root = str(tmp_path / "lake")
+    first = crawl(spark, CrawlConfig(dirs=[small_tree]))
+    write_crawl(first, lake_root, tag="t2", target_partitions=1)
     result = crawl(spark, CrawlConfig(dirs=[small_tree]))
-    write_crawl(result, lake_root, tag="t2", target_partitions=1)
     write_crawl(result, lake_root, tag="t2", target_partitions=1)  # re-run
     # files overwritten, status appended (append-only event log)
     assert read_files(spark, lake_root, "t2").count() == result.files.count()
-    assert read_status(spark, lake_root, "t2").filter("status = 'begin'").count() == 2
+    status = read_status(spark, lake_root, "t2")
+    assert status.filter("status = 'begin'").count() == 2
+    # ids continue across appends (the reference's SERIAL key), so the
+    # latest-per-status report sees one row per status, from the re-run
+    n = result.status.count()
+    assert status.select("id").distinct().count() == status.count() == 2 * n
+    brief = sorted(tuple(r) for r in status_brief(status).collect())
+    assert len(brief) == n
+    assert brief == sorted(tuple(r) for r in status_brief(result.status).collect())
 
 
 def test_jdbc_ddl_parity():

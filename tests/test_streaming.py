@@ -105,16 +105,30 @@ def test_status_listener_collects_progress(spark):
                 break
             time.sleep(0.5)
         df = listener.to_df(spark)
-        assert df.columns == ["time_s", "status", "value", "units"]
+        # the crawl's status shape: the status reports run on it
+        from storage_crawler_spark.reports import status_brief
+        from storage_crawler_spark.schemas import STATUS_SCHEMA
+
+        assert df.schema == STATUS_SCHEMA
         statuses = {r[1] for r in listener.rows}
         assert "stream begin" in statuses
         assert "insert rate" in statuses, f"no progress rows captured: {statuses}"
+        # one brief row per status; every row carries a real event time
+        rows = df.collect()
+        brief = status_brief(df).collect()
+        assert sorted(r.status for r in brief) == sorted({r.status for r in rows})
+        assert min(r.time for r in rows).year >= 2020
     finally:
         spark.streams.removeListener(listener)
 
 
 def test_incremental_crawl_epochs(spark, tmp_path):
-    """Two landing waves → two epochs, exactly-once, status rows per epoch."""
+    """Two landing waves → two epochs, exactly-once, status rows per epoch;
+    the tag's files and status tables have the batch crawl's schemas."""
+    from storage_crawler_spark.config import CrawlConfig
+    from storage_crawler_spark.crawl import crawl
+    from storage_crawler_spark.reports import first_thousand, large_old_files
+    from storage_crawler_spark.sources import read_files, read_status, write_crawl
     from storage_crawler_spark.streaming import incremental_crawl
 
     tree = tmp_path / "tree"
@@ -139,12 +153,19 @@ def test_incremental_crawl_epochs(spark, tmp_path):
     q.awaitTermination()
 
     files = spark.read.parquet(f"{lake}/storcrawl_inc/files")
+    write_crawl(crawl(spark, CrawlConfig(dirs=[str(tree)])), lake, tag="batch")
+    assert files.schema == read_files(spark, lake, "batch").schema
+    assert read_status(spark, lake, "inc").schema == read_status(spark, lake, "batch").schema
+    assert large_old_files(files, min_size=0).count() == 2
+    assert first_thousand(files, deterministic=True).count() == 3
+
     rows = {bytes(r.path).decode(): r for r in files.collect()}
     assert set(rows) == {str(f1), str(f2), f"{tmp_path}/missing"}
     assert rows[str(f1)].st_size == 1
     assert bytes(rows[str(f2)].extension) == b"tar.gz"
-    assert rows[f"{tmp_path}/missing"].error is not None
-    assert rows[f"{tmp_path}/missing"].st_size is None
+    # a failed lstat is NULL stat columns, as in the batch crawl
+    missing = rows[f"{tmp_path}/missing"]
+    assert (missing.st_mode, missing.st_ino, missing.st_size, missing.st_mtime) == (None,) * 4
     # owner: the path itself first, then its deepest mapped ancestor
     assert rows[str(f1)].owner == "alice"
     assert rows[str(f2)].owner == "bob"
@@ -153,6 +174,7 @@ def test_incremental_crawl_epochs(spark, tmp_path):
     status = spark.read.parquet(f"{lake}/storcrawl_inc/status")
     inserts = sorted((r.id, r.value) for r in status.collect())
     assert len(inserts) == 2  # one status row per epoch
+    assert len({i for i, _ in inserts}) == 2  # ids continue across epochs
     assert sum(v for _, v in inserts) == 3.0
 
     # re-running with nothing new landed appends nothing (exactly-once)
@@ -164,28 +186,31 @@ def test_incremental_crawl_epochs(spark, tmp_path):
 def test_stat_enrich_is_one_python_pass(spark, tmp_path):
     """lstat, extension and owner run in one mapInPandas kernel: the plan
     carries no pandas-UDF column (ArrowEvalPython) on top of it, and the
-    output columns keep their order."""
+    files row builder over it gives FILES_SCHEMA's columns in order."""
     from storage_crawler_spark.config import CrawlConfig
+    from storage_crawler_spark.crawl.pipeline import files_rows
     from storage_crawler_spark.functions.owners import find_owner
     from storage_crawler_spark.functions.paths import find_extension
-    from storage_crawler_spark.schemas import ENTRY_SCHEMA
+    from storage_crawler_spark.schemas import FILES_SCHEMA
     from storage_crawler_spark.streaming.incremental import stat_enrich
 
     f = tmp_path / "a.tar.gz"
     f.write_text("abc")
     paths = [str(f).encode(), str(tmp_path).encode() + b"/gone.txt"]
     owners = {str(tmp_path).encode(): "alice"}
-    df = stat_enrich(spark.createDataFrame([(p,) for p in paths], "path BINARY"), CrawlConfig(), owners)
+    df = files_rows(
+        stat_enrich(spark.createDataFrame([(p,) for p in paths], "path BINARY"), CrawlConfig(), owners)
+    )
 
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("MapInPandas") == 1
     assert "ArrowEvalPython" not in plan
-    assert df.columns == ENTRY_SCHEMA.names + ["extension", "owner", "st_mode", "insert_time"]
+    assert df.columns == FILES_SCHEMA.names
     got = {bytes(r.path): r for r in df.collect()}
     for p in paths:
         assert bytes(got[p].extension) == find_extension(p)
         assert got[p].owner == find_owner(p, owners) == "alice"
-    assert got[paths[0]].st_size == 3 and got[paths[1]].error is not None
+    assert got[paths[0]].st_size == 3 and got[paths[1]].st_size is None
 
 
 def test_streaming_rate_anomaly_matches_batch(spark):
