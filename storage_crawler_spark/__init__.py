@@ -4,7 +4,8 @@ A from-scratch re-expression of the capabilities of FredHutch/storage-crawler
 (reference: /root/reference, Apache-2.0) on Apache Spark:
 
 - the crawl plane (parallel directory walk + lstat + enrichment + sink) as a
-  distributed per-level frontier expansion over ``mapInPandas`` batches;
+  driver-side split into subtrees and one ``mapInPandas`` job that walks
+  them;
 - the report plane (the reference's canned PostgreSQL queries) as declarative
   DataFrame plans that Catalyst optimizes;
 - beyond-reference LLM-data-pipeline operators (dedup, similarity search,

@@ -96,23 +96,9 @@ class CrawlConfig:
     exclude: list[str] = field(default_factory=lambda: [".snapshot"])
     extension_length: int = 6  # storcrawl.py:27
     walkers: int = 4  # storcrawl.py:41
-    # In-task descent for chain-shaped frontiers (r14): when a frontier
-    # holds fewer dirs than the parallelism, each task walks up to
-    # deep_batch_levels levels locally (capped at walker.DIR_BUDGET adopted
-    # dirs) instead of paying a driver round-trip per level.  1 disables
-    # it (strict per-level BFS).  256: a PATH_MAX-deep chain (~2048
-    # levels) pays 8 round-trips instead of 64's 32.
-    deep_batch_levels: int = 256
     # Rotating-file crawl log (the reference derives logfile from the tag,
     # storcrawl.py:60; here it is opt-in).  None disables file logging.
     logfile: str | None = None
-    # When set, the crawl spills each frontier level (and the final files
-    # materialization) to parquet under this directory and re-reads it,
-    # instead of localCheckpoint: checkpoint blocks pin executor storage and
-    # die with the executor, while lake levels survive and free the heap —
-    # the right mode for metadata trees too big for cluster memory.  Spark
-    # knob, no reference analog.
-    level_store: str | None = None
 
     @classmethod
     def from_env(cls, **overrides) -> "CrawlConfig":
@@ -133,8 +119,6 @@ class CrawlConfig:
             cfg.owners = env["STORCRAWL_OWNERS"]
         if "STORCRAWL_WALKERS" in env:
             cfg.walkers = int(env["STORCRAWL_WALKERS"])
-        if "STORCRAWL_LEVEL_STORE" in env:
-            cfg.level_store = env["STORCRAWL_LEVEL_STORE"]
         if "STORCRAWL_LOGFILE" in env:
             cfg.logfile = env["STORCRAWL_LOGFILE"]
         # Reject unknown kwargs the way cls(**overrides) would: a typo like

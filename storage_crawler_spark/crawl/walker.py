@@ -1,44 +1,49 @@
-"""Distributed directory expansion + stat — the crawl plane's hot path, and
-the one place a filesystem entry becomes a row.
+"""The walk: the one place a filesystem entry becomes a row, and the one
+descent policy both the crawl and ``fsmeta`` use.
 
 The reference runs N walker processes popping a shared dir queue
 (``os.scandir`` per dir, re-enqueue child dirs, emit every entry) and N
 stater processes calling lstat per path, building each record as
 ``(path, stat_result, extension, owner)`` in the stat stage
-(storcrawl.py:326, 420-488).  The Spark-native shape is a **per-level
-frontier loop**: the set of directories at depth d is a DataFrame; one
-``mapInPandas`` pass scans every directory in the frontier AND stats its
-entries in the same Arrow batch (scandir's DirEntry.stat(follow_symlinks=
-False) is the lstat — one syscall pass, no inter-stage queue hop), derives
-each entry's extension and owner from the path bytes it already holds, and
-emits a columnar batch of finished records; the child directories become
-the depth d+1 frontier.
+(storcrawl.py:326, 420-488).  The Spark-native shape splits the tree once
+and walks it in one job:
+
+- :func:`split` runs on the driver: a names-only breadth-first expansion
+  from the roots until the frontier holds enough independent subtrees.  It
+  returns work items, directory paths only; no file path crosses the driver.
+- :func:`walk` runs in the tasks: each item emits the rows of its
+  children, and a frontier item also walks the subtrees below them.
+  scandir's ``DirEntry.stat(follow_symlinks=False)`` is the lstat, so
+  listing and stat are one syscall pass with no inter-stage queue hop.
 
 Row builders shared by every plane that stats entries:
 - :func:`lstat_row` — one lstat call on a path (crawl roots, the
-  incremental crawl's landed paths, fsmeta's roots and loose entries);
-- :func:`dir_entry_row` — one scandir ``DirEntry`` (the frontier kernel and
-  fsmeta's subtree walk).
+  incremental crawl's landed paths);
+- :func:`dir_entry_row` — one scandir ``DirEntry`` (everything the walk
+  finds below a root).
 Both return an ENTRY_SCHEMA tuple with ``is_dir``/``is_symlink`` taken from
 the lstat mode bits; the two crawls append extension and owner
 (:data:`CRAWL_ROW_SCHEMA`), fsmeta emits ENTRY_SCHEMA as is.
 
 Scale properties:
-- work distribution: the frontier is repartitioned by path hash each level,
-  so a skewed tree (one dir with 10M children) spreads across the cluster as
-  its children become the next frontier; within a single giant directory,
-  scandir streams and yields Arrow batches incrementally (no per-dir
-  materialization of the full child list beyond the batch).
+- work distribution: the driver's split costs one names-only scandir per
+  expanded dir, at most :data:`MAX_DRIVER_SCANS`, and stops once the
+  frontier holds :data:`SPLIT_PER_TASK` subtrees per task; a chain-shaped
+  tree is expanded level by level on the driver, so its levels spread over
+  the tasks too.  Items are dealt round-robin into one bundle per task, so
+  per-task Python start-up is paid once per core, not once per subtree.
+  A single giant directory is one item: scandir streams it and the kernel
+  yields Arrow batches incrementally.
 - no driver round-trip of row data: entries stay in executors; the driver
-  only sees per-level counts (observed on the level's own job), never paths.
-- lineage: each level is localCheckpoint()ed to keep the plan tree flat
-  (a depth-30 tree would otherwise nest 30 unions of mapInPandas plans).
+  sees the job's counts (an Observation), never paths.
 - the owner map is small (thousands of dirs) and travels in the kernel's
   closure, so the walk needs no second pass over its rows.
 
 Semantics preserved from the reference:
 - every entry (file, dir, symlink) is emitted, including excluded dirs
   (the exclusion filter gates *descent* only — storcrawl.py:466-473);
+  a root is walked whenever it is a real directory, even if its name is
+  excluded (the reference checks the dirs it finds, not its seeds);
 - symlinked dirs are emitted but never descended (follow_symlinks=False,
   storcrawl.py:465);
 - lstat, never stat (symlinks are records themselves, storcrawl.py:434).
@@ -54,12 +59,18 @@ from __future__ import annotations
 import os
 from collections import deque
 from stat import S_ISDIR, S_ISLNK
-from typing import Iterator
+from typing import Iterable, Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.types import BinaryType, BooleanType, StringType, StructField, StructType
+from pyspark.sql.types import (
+    ArrayType,
+    BinaryType,
+    BooleanType,
+    IntegerType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from storage_crawler_spark.functions.owners import find_owner
 from storage_crawler_spark.functions.paths import find_extension
@@ -67,9 +78,19 @@ from storage_crawler_spark.schemas import ENTRY_SCHEMA
 
 _BATCH_ROWS = 8192
 
-# The most dirs one task adopts beyond its frontier dirs in deep mode (see
-# scan_frontier_batches); equal to the default deep_batch_levels.
-DIR_BUDGET = 256
+# The crawl's split target, in frontier subtrees per walk task.  Targets
+# of 1-16 crawled a 20k, a 200k and a skewed tree equally fast within noise
+# on 4 cores; the finer split deals subtrees more evenly over the tasks.
+SPLIT_PER_TASK = 16
+
+# The most names-only scandirs the driver spends on a split.
+MAX_DRIVER_SCANS = 4096
+
+# One unit of walk work: ``(path, deep, level)``, ``level`` being path's
+# depth below its crawl root.  ``deep`` None: the root's own lstat row;
+# False: the rows of path's children; True: those and everything below
+# the children that are descendable dirs.
+Item = tuple[bytes, bool | None, int]
 
 # ENTRY_SCHEMA + the two path-derived columns both crawls emit.
 # (Built as fresh StructTypes: StructType.add mutates in place.)
@@ -78,13 +99,17 @@ CRAWL_ROW_SCHEMA = StructType(
     + [StructField("extension", BinaryType()), StructField("owner", StringType())]
 )
 
-# CRAWL_ROW_SCHEMA + the internal descend flag (is_dir AND not excluded).
-# The record's is_dir column is the REAL lstat answer — an excluded
-# directory is still a directory (the exclusion contract gates descent
-# only); the caller derives the next frontier from ``descend`` and drops
-# the column.
-CRAWL_DESCEND_SCHEMA = StructType(
-    list(CRAWL_ROW_SCHEMA.fields) + [StructField("descend", BooleanType())]
+# The crawl kernel's rows: CRAWL_ROW_SCHEMA + the entry's depth below its
+# root, which the crawl observes and drops.
+WALK_ROW_SCHEMA = StructType(list(CRAWL_ROW_SCHEMA.fields) + [StructField("level", IntegerType())])
+
+# One bundle of items per crawl task, as parallel arrays.
+BUNDLE_SCHEMA = StructType(
+    [
+        StructField("path", ArrayType(BinaryType(), False)),
+        StructField("deep", ArrayType(BooleanType())),
+        StructField("level", ArrayType(IntegerType(), False)),
+    ]
 )
 
 
@@ -135,103 +160,84 @@ def _enrich(row: tuple, extension_length: int, owners: dict[bytes, str] | None) 
     return row + (find_extension(path, extension_length), find_owner(path, owners))
 
 
-def scan_frontier_batches(
-    dir_paths: Iterator[pd.DataFrame],
-    exclude_names: frozenset[bytes],
-    levels_per_job: int = 1,
-    extension_length: int = 6,
-    owners: dict[bytes, str] | None = None,
-) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel: for each frontier directory, scandir + lstat its
-    children, yielding columnar batches of CRAWL_DESCEND_SCHEMA rows.
+def split(
+    roots: list[bytes], exclude: frozenset[bytes], target: int, max_scans: int = MAX_DRIVER_SCANS
+) -> list[Item]:
+    """Driver side: the work items of a walk over ``roots``.
 
-    ``is_dir`` is the real lstat answer (symlinks-to-dirs are False —
-    follow_symlinks=False); ``descend`` additionally applies the exclusion
-    list, so the caller derives the next frontier with a plain filter, no
-    second pass, and excluded dirs still report is_dir=true in the output.
+    Breadth-first from the roots, each expanded dir costs one scandir that
+    reads names and d_type only, and becomes a ``deep=False`` item (a task
+    re-lists it to emit its children's rows).  Expansion stops when the
+    frontier holds ``target`` dirs, after ``max_scans`` scandirs, or when
+    the tree is exhausted; what is left on the frontier becomes
+    ``deep=True`` items.  Every root is an item of its own row."""
+    items: list[Item] = [(r, None, 0) for r in roots]
+    frontier = deque((r, 0) for r in roots if lstat_row(r)[1])
+    scans = 0
+    while frontier and len(frontier) < target and scans < max_scans:
+        d, level = frontier.popleft()
+        scans += 1
+        items.append((d, False, level))
+        try:
+            it = os.scandir(d)
+        except OSError:
+            continue  # its task meets the same error and skips it
+        with it:
+            for entry in it:
+                try:
+                    real_dir = entry.is_dir(follow_symlinks=False)
+                except OSError:
+                    real_dir = False
+                if real_dir and entry.name not in exclude:
+                    frontier.append((entry.path, level + 1))
+    items.extend((d, True, level) for d, level in frontier)
+    return items
 
-    ``levels_per_job`` > 1 engages IN-TASK descent (r14, the deep-chain
-    fix): a chain-shaped tree puts ONE directory in each frontier, so the
-    per-level driver round-trip (shuffle + materialize ≈ two Spark jobs)
-    dominates a 10k-deep crawl by ~10,000×.  With k levels per job the
-    task keeps a local BFS deque of (dir, rel_depth): a descendable child
-    at rel depth < k is scanned in the SAME task (its row is emitted with
-    descend=false — the driver must not re-scan it), while a child AT
-    rel depth k is handed back with descend=true as next frontier.
-    :data:`DIR_BUDGET` caps how many EXTRA directories one task adopts
-    in-task (frontier dirs are driver-routed work and don't count), so a
-    frontier that suddenly WIDENS (one dir fanning out to 100k) hands the
-    fan-out back to the driver for repartitioning instead of serializing
-    the subtree into one task — deep mode costs at most ``DIR_BUDGET``
-    serial scandir calls where there was nothing to parallelize anyway.
-    Routing is decided at enqueue time, so every emitted row's descend
-    flag is final.
-    """
-    cols = [f.name for f in CRAWL_DESCEND_SCHEMA.fields]
-    buf: list[tuple] = []
 
-    for pdf in dir_paths:
-        queue: deque[tuple[bytes, int]] = deque(
-            (bytes(raw), 0) for raw in pdf["path"]
-        )
-        extra = 0  # in-task-adopted dirs, capped by DIR_BUDGET
-        while queue:
-            d, rel = queue.popleft()
+def walk(items: Iterable[Item], exclude: frozenset[bytes]) -> Iterator[tuple[int, tuple]]:
+    """Task side: ``(level, ENTRY_SCHEMA row)`` for every entry the items
+    cover (see :data:`Item`).  A deep item descends every real directory
+    whose name is not in ``exclude``; symlinks are never followed."""
+    for path, deep, level in items:
+        if deep is None:
+            yield level, lstat_row(path)
+            continue
+        stack = [(path, level)]
+        while stack:
+            d, lv = stack.pop()
             try:
                 it = os.scandir(d)
             except OSError:
-                # Unreadable dir: the dir row itself was emitted by the
-                # parent's scan; the reference just logs and moves on
-                # (storcrawl.py:463 try) — we do the same: skip.
+                # Unreadable dir: its own row came from its parent's scan;
+                # the reference logs and moves on (storcrawl.py:463).
                 continue
             with it:
                 for entry in it:
                     row = dir_entry_row(entry)
-                    descend = row[1] and entry.name not in exclude_names
-                    if descend and rel + 1 < levels_per_job and extra < DIR_BUDGET:
-                        queue.append((row[0], rel + 1))
-                        extra += 1
-                        descend = False  # handled in-task; driver must not re-scan
-                    buf.append(_enrich(row, extension_length, owners) + (descend,))
-                    if len(buf) >= _BATCH_ROWS:
-                        yield pd.DataFrame(buf, columns=cols)
-                        buf = []
-    if buf:
-        yield pd.DataFrame(buf, columns=cols)
+                    yield lv + 1, row
+                    if deep and row[1] and entry.name not in exclude:
+                        stack.append((row[0], lv + 1))
 
 
-def expand_level(
-    frontier: DataFrame,
-    exclude_names: frozenset[bytes],
-    parallelism: int,
-    levels_per_job: int = 1,
+def walk_batches(
+    bundles: Iterator[pd.DataFrame],
+    exclude: frozenset[bytes],
     extension_length: int = 6,
     owners: dict[bytes, str] | None = None,
-) -> DataFrame:
-    """One frontier level → entries DataFrame (CRAWL_DESCEND_SCHEMA).
-    ``levels_per_job`` > 1 lets each task descend that many levels in-task
-    (deep-chain mode — see :func:`scan_frontier_batches`)."""
-    n = max(1, parallelism)
-    kernel = lambda it: scan_frontier_batches(  # noqa: E731
-        it, exclude_names, levels_per_job, extension_length, owners
-    )
-    return frontier.repartition(n, F.col("path")).mapInPandas(kernel, CRAWL_DESCEND_SCHEMA)
-
-
-def stat_roots(
-    spark, roots: list[bytes], extension_length: int = 6, owners: dict[bytes, str] | None = None
-) -> tuple[DataFrame, int]:
-    """Stat the crawl roots themselves (the reference seeds roots into the
-    dir queue, so root dirs appear as rows too once their parent is scanned —
-    but roots have no parent in the crawl, so we stat them explicitly).
-    Roots are always descended when they are real dirs: the reference's
-    exclusion check applies to dirs FOUND during the walk, not to seeds.
-    Also returns how many roots descend, so no job counts them."""
-    recs = []
-    for r in roots:
-        row = lstat_row(r)
-        recs.append(_enrich(row, extension_length, owners) + (row[1],))
-    return spark.createDataFrame(recs, CRAWL_DESCEND_SCHEMA), sum(rec[-1] for rec in recs)
+) -> Iterator[pd.DataFrame]:
+    """mapInPandas kernel: walk each BUNDLE_SCHEMA row's items, yielding
+    WALK_ROW_SCHEMA batches (extension and owner derived in the walk)."""
+    cols = WALK_ROW_SCHEMA.fieldNames()
+    buf: list[tuple] = []
+    for pdf in bundles:
+        for paths, deeps, levels in zip(pdf["path"], pdf["deep"], pdf["level"]):
+            for level, row in walk(zip(map(bytes, paths), deeps, levels), exclude):
+                buf.append(_enrich(row, extension_length, owners) + (level,))
+                if len(buf) >= _BATCH_ROWS:
+                    yield pd.DataFrame(buf, columns=cols)
+                    buf = []
+    if buf:
+        yield pd.DataFrame(buf, columns=cols)
 
 
 def stat_path_batches(

@@ -82,25 +82,6 @@ def _persist_view(df: DataFrame, name: str) -> None:
     df.createOrReplaceTempView(name)
 
 
-def _scoped_persist_view(df: DataFrame, name: str) -> DataFrame:
-    """Persist + temp view for a BUILD-SCOPED relation: one that is
-    consumed (usually by a :func:`_checkpoint_view` job) during the
-    builder itself and must be UNPERSISTED by the caller before the
-    builder returns, so no cache outlives the build (the audit_cache
-    contract: every persist still live at entry completion must appear as
-    an InMemoryTableScan in the final plan — a build-scoped persist never
-    can, and tools/audit_cache.py instead verifies it was RELEASED).
-
-    Exists because the checkpoint-input shape genuinely needs the cache:
-    the winnow fk build joins the hashed relation against an aggregate of
-    itself — un-persisted, the planner inlines the md5-hashing lambda
-    into both sides and the build degenerates (measured as a multi-minute
-    wedge at sf0.1, r12)."""
-    df.persist()
-    df.createOrReplaceTempView(name)
-    return df
-
-
 def _checkpoint_view(df: DataFrame, name: str) -> DataFrame:
     """localCheckpoint + temp view — for CTE-bearing relations consumed
     inside WITH definitions, where cache replacement cannot reach (see

@@ -158,6 +158,36 @@ def parquet_row_count(path: str) -> int:
     return sum(pq.read_metadata(f).num_rows for f in _parquet_files(path))
 
 
+class MissingColumnStats(ValueError):
+    """A parquet row group holds rows but no min/max statistics for the
+    column asked about, so its maximum cannot be read from the footer."""
+
+
+def parquet_column_max(path: str, column: str):
+    """Largest value of a top-level ``column`` from parquet footer
+    statistics — a driver-side metadata read (no Spark job).  Row groups
+    with no rows are skipped; ``None`` when the table has no rows.  Raises
+    :class:`MissingColumnStats` when a row group with rows has no min/max
+    for the column, so a caller never takes a partial maximum."""
+    import pyarrow.parquet as pq
+
+    top = None
+    for f in _parquet_files(path):
+        md = pq.read_metadata(f)
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            if rg.num_rows == 0:
+                continue
+            col = next(
+                (rg.column(j) for j in range(rg.num_columns) if rg.column(j).path_in_schema == column), None
+            )
+            stats = col.statistics if col is not None else None
+            if stats is None or not stats.has_min_max:
+                raise MissingColumnStats(f"{f}: row group {g} has no min/max statistics for {column!r}")
+            top = stats.max if top is None else max(top, stats.max)
+    return top
+
+
 def _nullable(dt: DataType) -> DataType:
     """``dt`` with every field, element and value nullable, as Spark's file
     sources read any schema."""

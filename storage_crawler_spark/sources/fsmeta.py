@@ -19,14 +19,13 @@ This module implements that as a Spark 4 Python Data Source
 
 Scale design (the part that must survive 1000 executors):
 
-- **Partitioning**: the driver does a *names-only* breadth-first expansion of
-  the root until it holds enough independent subtrees (≥ ``partitions``
-  option, default 64), then hands each reader task a bundle of subtree roots
-  (round-robin by discovery order) plus the loose files found on the spine.
-  Deep-but-narrow trees stop expanding early (frontier exhausted) and
-  degenerate to few partitions — exactly the available parallelism; wide
-  trees (the 100 TB case: millions of dirs) cap driver work at
-  ``max_driver_scans`` scandirs and fan the rest out.
+- **Partitioning**: the crawl's own split (``walker.split``): a
+  *names-only* breadth-first expansion of the root on the driver until it
+  holds enough independent subtrees (``partitions`` option, default 64),
+  capped at ``max_driver_scans`` scandirs (the 100 TB case: millions of
+  dirs).  Its items — directory paths only — are dealt round-robin into at
+  most ``partitions`` reader tasks, and each task runs the crawl's
+  ``walker.walk`` over its bundle.
 - **Filter pushdown** (``pushFilters``, Spark 4.1): comparisons against the
   numeric stat columns and equality on ``is_dir``/``is_symlink`` are applied
   per-entry inside ``read()``; everything else is left for Spark.  Consumed
@@ -36,11 +35,11 @@ Scale design (the part that must survive 1000 executors):
 
 Reference parity: one row per entry — files, dirs, symlinks (storcrawl.py:473);
 ``lstat`` never follows symlinks (storcrawl.py:434); excluded dir names are
-emitted but not descended (storcrawl.py:466-473); lstat failure yields NULL
-stat columns + ``error`` (the reference's stale-struct defect, fixed —
-storcrawl.py:427-440).  Rows come from the crawl walker's row builders
-(``walker.lstat_row`` / ``walker.dir_entry_row``), so both planes stat an
-entry the same way.  Schema is the crawl plane's ENTRY_SCHEMA, so
+emitted but not descended (storcrawl.py:466-473), and the root is walked
+even when its name is excluded; lstat failure yields NULL stat columns +
+``error`` (the reference's stale-struct defect, fixed —
+storcrawl.py:427-440).  The walk is the crawl's (``walker.split`` /
+``walker.walk``), so both planes find and stat an entry the same way.  Schema is the crawl plane's ENTRY_SCHEMA, so
 ``functions.paths.extension_col`` / ``owners.owner_col`` compose on top
 unchanged.
 """
@@ -68,7 +67,7 @@ from pyspark.sql.datasource import (
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
-from storage_crawler_spark.crawl.walker import dir_entry_row, lstat_row
+from storage_crawler_spark.crawl.walker import MAX_DRIVER_SCANS, Item, split, walk
 from storage_crawler_spark.schemas import ENTRY_SCHEMA
 
 _ARROW_SCHEMA = to_arrow_schema(ENTRY_SCHEMA)
@@ -87,17 +86,10 @@ _BATCH_ROWS = 4096
 
 
 @dataclass
-class _Subtrees(InputPartition):
-    """One reader task: recursively walk ``walk_roots`` (emitting each root's
-    own row first) and lstat ``stat_only`` paths without descending."""
+class _Bundle(InputPartition):
+    """One reader task: the ``walker.walk`` items it covers."""
 
-    walk_roots: list[bytes]
-    stat_only: list[bytes]
-
-
-def _descendable(row: tuple, exclude: frozenset[bytes]) -> bool:
-    """A real (lstat) directory whose name is not excluded."""
-    return row[1] and os.path.basename(row[0]) not in exclude
+    items: list[Item]
 
 
 class FsMetaReader(DataSourceReader):
@@ -110,7 +102,7 @@ class FsMetaReader(DataSourceReader):
             e.encode() for e in options.get("exclude", ".snapshot").split(",") if e
         )
         self.target_partitions = int(options.get("partitions", "64"))
-        self.max_driver_scans = int(options.get("max_driver_scans", "4096"))
+        self.max_driver_scans = int(options.get("max_driver_scans", str(MAX_DRIVER_SCANS)))
         self.pushed: list[tuple[str, str, object]] = []  # (col, op, value)
 
     # -- pushdown ----------------------------------------------------------
@@ -159,88 +151,30 @@ class FsMetaReader(DataSourceReader):
 
     # -- planning ----------------------------------------------------------
     def partitions(self) -> list[InputPartition]:
-        """Names-only BFS split of the tree into independent subtrees.
-
-        The driver never lstats children (only scandir d_type checks), so
-        planning cost is one scandir per expanded dir, capped by
-        ``max_driver_scans``.
-        """
-        descend = _descendable(lstat_row(self.root), self.exclude)
-        stat_only: list[bytes] = [self.root] if not descend else []
-        frontier: list[bytes] = [self.root] if descend else []
-        subtree_roots: list[bytes] = []
-        scans = 0
-        while frontier and len(frontier) + len(subtree_roots) < self.target_partitions and scans < self.max_driver_scans:
-            d = frontier.pop(0)
-            scans += 1
-            try:
-                it = os.scandir(d)
-            except OSError:
-                stat_only.append(d)  # unreadable: still gets its error row
-                continue
-            # d was consumed by the spine, so no subtree walk will emit its
-            # row — stat it (without descending) like any other loose entry.
-            stat_only.append(d)
-            with it:
-                for entry in it:
-                    epath = os.fsencode(entry.path)
-                    try:
-                        is_real_dir = entry.is_dir(follow_symlinks=False)
-                    except OSError:
-                        is_real_dir = False
-                    if is_real_dir and os.path.basename(epath) not in self.exclude:
-                        frontier.append(epath)
-                    else:
-                        stat_only.append(epath)
-        subtree_roots.extend(frontier)
-
-        n = max(1, min(self.target_partitions, len(subtree_roots) + (1 if stat_only else 0)))
-        bundles: list[list[bytes]] = [[] for _ in range(n)]
-        for i, r in enumerate(subtree_roots):
-            bundles[i % n].append(r)
-        parts = [_Subtrees(walk_roots=b, stat_only=[]) for b in bundles if b]
-        if stat_only or not parts:
-            if parts:
-                parts[0].stat_only = stat_only
-            else:
-                parts = [_Subtrees(walk_roots=[], stat_only=stat_only)]
-        return parts
+        """``walker.split`` of the tree, dealt round-robin into at most
+        ``partitions`` bundles.  The driver never lstats a child (scandir
+        d_type checks only), so planning costs one scandir per expanded
+        dir, capped by ``max_driver_scans``."""
+        items = split([self.root], self.exclude, self.target_partitions, self.max_driver_scans)
+        n = max(1, min(self.target_partitions, len(items)))
+        return [_Bundle(items[i::n]) for i in range(n)]
 
     # -- execution ---------------------------------------------------------
-    def read(self, partition: _Subtrees) -> Iterator[pa.RecordBatch]:
+    def read(self, partition: _Bundle) -> Iterator[pa.RecordBatch]:
         pred = self._row_pred()
         buf: list[tuple] = []
-
-        def emit(rec: tuple):
-            if pred is None or pred(rec):
-                buf.append(rec)
 
         def flush():
             cols = list(zip(*buf)) if buf else [[] for _ in _ARROW_SCHEMA]
             arrays = [pa.array(c, type=f.type) for c, f in zip(cols, _ARROW_SCHEMA)]
             return pa.RecordBatch.from_arrays(arrays, schema=_ARROW_SCHEMA)
 
-        for p in partition.stat_only:
-            emit(lstat_row(p))
-        for root in partition.walk_roots:
-            rec = lstat_row(root)
-            emit(rec)
-            stack = [root] if _descendable(rec, self.exclude) else []
-            while stack:
-                d = stack.pop()
-                try:
-                    it = os.scandir(d)
-                except OSError:
-                    continue  # reference behavior: log-and-skip (storcrawl.py:463)
-                with it:
-                    for entry in it:
-                        rec = dir_entry_row(entry)
-                        emit(rec)
-                        if _descendable(rec, self.exclude):
-                            stack.append(rec[0])
-                        if len(buf) >= _BATCH_ROWS:
-                            yield flush()
-                            buf = []
+        for _, rec in walk(partition.items, self.exclude):
+            if pred is None or pred(rec):
+                buf.append(rec)
+                if len(buf) >= _BATCH_ROWS:
+                    yield flush()
+                    buf = []
         if buf:
             yield flush()
 
@@ -251,9 +185,9 @@ class FsMetaStreamReader(DataSourceStreamReader):
 
     The offset is a **modification-time watermark** (one wall-clock second,
     JSON ``{"mtime": N}``): ``latestOffset`` advances it to *now* at batch
-    planning; ``partitions(start, end)`` reuses the batch reader's BFS
-    subtree split so the listing itself fans out across executors; and
-    ``read`` walks its subtrees applying the window as a pushed predicate.
+    planning; ``partitions(start, end)`` reuses the batch reader's split so
+    the listing itself fans out across executors; and ``read`` walks its
+    bundle applying the window as a pushed predicate.
     Combined with checkpointing (``writeStream.option("checkpointLocation",
     …)``) this is exactly-once *per mtime window*: a batch that fails replays
     the same [start, end) window.
@@ -294,16 +228,11 @@ class FsMetaStreamReader(DataSourceStreamReader):
         if start["mtime"] >= end["mtime"]:
             return []
         return [
-            _SubtreesWindow(
-                walk_roots=p.walk_roots,
-                stat_only=p.stat_only,
-                mtime_lo=start["mtime"],
-                mtime_hi=end["mtime"],
-            )
+            _BundleWindow(items=p.items, mtime_lo=start["mtime"], mtime_hi=end["mtime"])
             for p in self._batch.partitions()
         ]
 
-    def read(self, partition: "_SubtreesWindow") -> Iterator[pa.RecordBatch]:
+    def read(self, partition: "_BundleWindow") -> Iterator[pa.RecordBatch]:
         reader = FsMetaReader.__new__(FsMetaReader)
         reader.__dict__.update(self._batch.__dict__)
         reader.pushed = list(self._batch.pushed) + [
@@ -317,7 +246,7 @@ class FsMetaStreamReader(DataSourceStreamReader):
 
 
 @dataclass
-class _SubtreesWindow(_Subtrees):
+class _BundleWindow(_Bundle):
     mtime_lo: int = 0
     mtime_hi: int = 2**62
 

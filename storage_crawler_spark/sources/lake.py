@@ -18,8 +18,9 @@ Scale design (the 100 TB shape):
   tiny ones elsewhere).
 - **Append-only status**: each crawl/report run appends normalized metric
   rows through :func:`append_status`, which continues the tag's ``id``
-  sequence as the reference's SERIAL key does; readers aggregate
-  (latest-per-key by max id, B8) instead of updating in place.
+  sequence as the reference's SERIAL key does (:func:`append_with_ids`,
+  which the incremental crawl's ``files`` appends use too); readers
+  aggregate (latest-per-key by max id, B8) instead of updating in place.
 - ``drop_tag`` + overwrite mode reproduce the reference's destructive
   re-create semantics (DROP SCHEMA … CASCADE, storcrawl.py:97-131).
 """
@@ -33,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from storage_crawler_spark.crawl.pipeline import CrawlResult
-from storage_crawler_spark.schemas import STATUS_SCHEMA
+from storage_crawler_spark.plans.views import parquet_column_max
 
 
 def _tag_dir(root: str, tag: str) -> str:
@@ -65,18 +66,23 @@ def write_crawl(
     return tag_dir
 
 
-def append_status(status: DataFrame, root: str, tag: str = "crawl") -> None:
-    """Append STATUS_SCHEMA rows to a tag's ``status`` with ``id`` shifted
-    past the largest id there, as the reference's SERIAL continues (the
-    latest-per-status report keys on it).  A new table costs no Spark job.
-    Appends do not coordinate: one writer per tag at a time."""
-    path = os.path.join(_tag_dir(root, tag), "status")
+def append_with_ids(df: DataFrame, path: str) -> None:
+    """Append ``df`` to the parquet table at ``path`` with its non-negative
+    ``id`` column shifted past the largest id there, as the reference's
+    SERIAL continues.  The largest id is read from the parquet footers
+    (``views.parquet_column_max``), so only the write runs a Spark job.
+    Appends do not coordinate: one writer per table at a time."""
     if os.path.isdir(path):
-        spark = status.sparkSession
-        top = spark.read.schema(STATUS_SCHEMA).parquet(path).agg(F.max("id")).first()[0]
+        top = parquet_column_max(path, "id")
         if top is not None:
-            status = status.withColumn("id", F.col("id") + (top + 1))
-    status.write.mode("append").parquet(path)
+            df = df.withColumn("id", F.col("id") + (top + 1))
+    df.write.mode("append").parquet(path)
+
+
+def append_status(status: DataFrame, root: str, tag: str = "crawl") -> None:
+    """Append STATUS_SCHEMA rows to a tag's ``status``, ids continued (the
+    latest-per-status report keys on them)."""
+    append_with_ids(status, os.path.join(_tag_dir(root, tag), "status"))
 
 
 def write_bucketed(

@@ -15,13 +15,13 @@ file.  The stat stage is the walker's own kernel
 ``mapInPandas``), and each epoch's rows come from the batch crawl's row
 builders (``pipeline.files_rows``, ``pipeline.status_rows``), so an
 incremental tag's ``files`` and ``status`` tables have the batch crawl's
-schemas and the two modes cannot drift.  ``files`` ids are unique within
-one epoch's write; status ids continue across epochs
-(``lake.append_status``).
+schemas and the two modes cannot drift.  Both tables' ids continue across
+epochs (``lake.append_with_ids``).
 """
 
 from __future__ import annotations
 
+import datetime as _dt
 import os
 import time as _time
 
@@ -32,7 +32,7 @@ from pyspark.sql.streaming import StreamingQuery
 from storage_crawler_spark.config import CrawlConfig
 from storage_crawler_spark.crawl.pipeline import files_rows, status_rows
 from storage_crawler_spark.crawl.walker import CRAWL_ROW_SCHEMA, stat_path_batches
-from storage_crawler_spark.sources.lake import append_status
+from storage_crawler_spark.sources.lake import append_status, append_with_ids
 
 
 def read_path_stream(spark: SparkSession, landing_dir: str) -> DataFrame:
@@ -80,7 +80,8 @@ def incremental_crawl(
 
     def commit_epoch(batch: DataFrame, epoch_id: int) -> None:
         obs = Observation()
-        files_rows(batch).observe(obs, F.count(F.lit(1)).alias("n")).write.mode("append").parquet(files_dir)
+        stamp = _dt.datetime.now(_dt.timezone.utc)
+        append_with_ids(files_rows(batch, stamp).observe(obs, F.count(F.lit(1)).alias("n")), files_dir)
         event = (_time.time(), "file metadata inserts", float(obs.get["n"]), "inserts")
         append_status(status_rows(batch.sparkSession, [event]), lake_root, tag)
 

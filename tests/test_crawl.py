@@ -5,6 +5,7 @@ from __future__ import annotations
 import os
 
 import pytest
+from crawl_reference import reference_walk
 
 from storage_crawler_spark.config import CrawlConfig
 from storage_crawler_spark.crawl import crawl
@@ -99,9 +100,9 @@ def test_crawl_rows_and_semantics(spark, tree, tmp_path):
 
 
 def test_crawl_kernel_enrichment_is_exact(spark, tree, tmp_path):
-    """extension and owner come out of the walker kernel (stat_roots for
-    the root row, the frontier kernel for the rest) and equal the per-path
-    reference functions on every row, at a non-default extension length."""
+    """extension and owner come out of the walk kernel (the root's lstat
+    row and every scanned entry alike) and equal the per-path reference
+    functions on every row, at a non-default extension length."""
     from storage_crawler_spark.functions.owners import find_owner, parse_owners_file
     from storage_crawler_spark.functions.paths import find_extension
 
@@ -124,16 +125,16 @@ def test_crawl_kernel_enrichment_is_exact(spark, tree, tmp_path):
 
 
 def test_crawl_rates_use_their_own_stage_times(spark, tree):
-    """Walk rate over the level loop, stat rate over the files stage
-    (storcrawl.py:503-505); insert rate over the whole crawl."""
+    """Walk rate over the walk job (storcrawl.py:503-505), which also runs
+    every lstat, so the stat rate is the walk's rate; insert rate over the
+    whole crawl."""
     res = crawl(spark, CrawlConfig(dirs=[str(tree)]))
     s = res.summary
     rates = {r.status: r.value for r in res.status.collect() if r.units and r.units.endswith("/sec")}
     assert rates["file walk rate"] == pytest.approx(s["files"] / s["walk_sec"])
-    assert rates["file stat rate"] == pytest.approx(s["files"] / s["stat_sec"])
+    assert rates["file stat rate"] == rates["file walk rate"]
     assert rates["insert rate"] == pytest.approx(s["files"] / s["elapsed_sec"])
-    assert rates["file walk rate"] != rates["file stat rate"]
-    assert s["walk_sec"] + s["stat_sec"] <= s["elapsed_sec"]
+    assert s["walk_sec"] <= s["elapsed_sec"]
 
 
 def test_crawl_is_deterministic_rowset(spark, tree):
@@ -160,41 +161,23 @@ def test_crawl_logfile_rotating_reference_format(spark, tree, tmp_path):
     assert len(ends) == 2
 
 
-def test_crawl_level_store_spills_levels_and_matches_default(spark, tree, tmp_path):
-    """level_store mode must produce the same rowset as localCheckpoint mode,
-    while leaving per-level parquet artifacts (+ files_stage) in the store."""
-    store = tmp_path / "levels"
-    res_default = crawl(spark, CrawlConfig(dirs=[str(tree)]))
-    res_lake = crawl(spark, CrawlConfig(dirs=[str(tree)], level_store=str(store)))
+def test_crawl_fixture_matches_reference_walk(spark, tree):
+    """The curated fixture against the independent reference walk: same
+    entry set, each row's size, type bits, mtime and inode, and the
+    summary's counts and depth."""
+    import stat as stat_mod
 
-    default_paths = {bytes(r.path) for r in res_default.files.collect()}
-    lake_rows = {bytes(r.path): r for r in res_lake.files.collect()}
-    assert set(lake_rows) == default_paths
-    assert res_lake.summary["files"] == res_default.summary["files"]
-    assert res_lake.summary["dirs"] == res_default.summary["dirs"]
-
-    names = sorted(p.name for p in store.iterdir())
-    assert "files_stage" in names
-    levels = [n for n in names if n.startswith("level_")]
-    # r14 deep-batching: a small frontier descends in-task, so the whole
-    # 3-deep fixture collapses into ONE spilled frontier round; with
-    # batching disabled the per-level artifacts reappear (checked below)
-    assert len(levels) >= 1
-    # spilled levels are real re-readable parquet incl. non-UTF-8 path bytes
-    lv0 = spark.read.parquet(str(store / levels[0]))
-    assert "descend" in lv0.columns  # frontier flag travels with the level
-    root = bytes(tree)
-    assert root + b"/caf\xe9.dat" in {bytes(r.path) for r in lv0.collect()}
-
-    # strict per-level BFS (deep_batch_levels=1) still spills one artifact
-    # per depth and produces the identical rowset
-    store2 = tmp_path / "levels_bfs"
-    res_bfs = crawl(spark, CrawlConfig(
-        dirs=[str(tree)], level_store=str(store2), deep_batch_levels=1))
-    assert {bytes(r.path) for r in res_bfs.files.collect()} == default_paths
-    bfs_levels = [n for n in sorted(p.name for p in store2.iterdir())
-                  if n.startswith("level_")]
-    assert len(bfs_levels) >= 3
+    expect = reference_walk(tree)
+    res = crawl(spark, CrawlConfig(dirs=[str(tree)]))
+    got = {bytes(r.path): r for r in res.files.collect()}
+    assert set(got) == set(expect)
+    for p, (st, _) in expect.items():
+        r = got[p]
+        assert (r.st_size, r.st_mtime, r.st_ino) == (st.st_size, int(st.st_mtime), st.st_ino), p
+        assert int(r.st_mode, 2) & 0o170000 == stat_mod.S_IFMT(st.st_mode), p
+    assert res.summary["files"] == len(expect)
+    assert res.summary["dirs"] == sum(stat_mod.S_ISDIR(st.st_mode) for st, _ in expect.values())
+    assert res.summary["depth"] == max(level for _, level in expect.values())
 
 
 def test_crawl_random_tree_matches_reference_walk(spark, tmp_path):
@@ -248,24 +231,7 @@ def test_crawl_random_tree_matches_reference_walk(spark, tmp_path):
     with open(excluded_dir + b"/invisible.txt", "wb") as fh:
         fh.write(b"no")
 
-    # independent reference walk with the reference's semantics
-    expect: dict[bytes, os.stat_result] = {}
-    frontier = [bytes(root)]
-    expect[bytes(root)] = os.lstat(bytes(root))
-    while frontier:
-        nxt = []
-        for d in frontier:
-            for entry in os.scandir(d):
-                p = entry.path if isinstance(entry.path, bytes) else os.fsencode(entry.path)
-                st = os.lstat(p)
-                expect[p] = st
-                if (
-                    stat_mod.S_ISDIR(st.st_mode)
-                    and os.path.basename(p) != b"EXCLUDED"
-                ):
-                    nxt.append(p)
-        frontier = nxt
-
+    expect = {p: st for p, (st, _) in reference_walk(root, exclude=(b"EXCLUDED",)).items()}
     res = crawl(spark, CrawlConfig(dirs=[str(root)], exclude=["EXCLUDED"]))
     got = {bytes(r.path): r for r in res.files.collect()}
 
@@ -277,23 +243,87 @@ def test_crawl_random_tree_matches_reference_walk(spark, tmp_path):
         assert r.st_mtime == int(st.st_mtime), p
 
 
-def test_strict_bfs_level_runs_two_jobs(spark, tmp_path):
-    """Frontier sizes cost no count job: the roots are counted on the
-    driver and each next frontier by an Observation on the level's
-    materialize job.  A two-level strict-BFS crawl runs each level's
-    shuffle and materialize jobs, plus the files stage: 5 jobs."""
+def _crawl_jobs(spark, cfg):
+    """(result, number of Spark jobs the crawl ran), by job group."""
     import uuid
 
-    root = tmp_path / "two"
-    (root / "a").mkdir(parents=True)
-    (root / "a" / "f.txt").write_text("f")
     sc = spark.sparkContext
     group = f"crawl-{uuid.uuid4().hex}"
     sc.setLocalProperty("spark.jobGroup.id", group)
     try:
-        res = crawl(spark, CrawlConfig(dirs=[str(root)], deep_batch_levels=1))
+        res = crawl(spark, cfg)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events arrive asynchronously
+    return res, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_crawl_runs_one_job(spark, tmp_path):
+    """The walk is one Spark job whatever the tree's shape: a two-level
+    tree and a 150-deep chain each run exactly one, and the summary's
+    depth is the deepest level walked."""
+    root = tmp_path / "two"
+    (root / "a").mkdir(parents=True)
+    (root / "a" / "f.txt").write_text("f")
+    res, jobs = _crawl_jobs(spark, CrawlConfig(dirs=[str(root)]))
     assert res.summary["depth"] == 2 and res.summary["files"] == 3
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2 * 2 + 1
+    assert jobs == 1
+
+    chain = tmp_path / "chain"
+    d = chain
+    for i in range(150):
+        d = d / f"d{i}"
+    d.mkdir(parents=True)
+    (d / "leaf.txt").write_text("x")
+    res, jobs = _crawl_jobs(spark, CrawlConfig(dirs=[str(chain)]))
+    # the root, 150 dirs and the leaf, which sits 151 levels below the root
+    assert res.summary["files"] == 152 and res.summary["depth"] == 151
+    assert jobs == 1
+
+
+def test_excluded_root_name_is_walked(spark, tmp_path):
+    """Exclusion gates the dirs a walk finds, not its roots: a root whose
+    name is excluded is walked by the crawl and by fsmeta alike, while an
+    excluded dir below it is emitted but not descended."""
+    from storage_crawler_spark.sources.fsmeta import register_fsmeta
+
+    root = tmp_path / ".snapshot"
+    (root / "kept" / ".snapshot").mkdir(parents=True)
+    (root / "kept" / "f.txt").write_text("f")
+    (root / "kept" / ".snapshot" / "hidden.txt").write_text("h")
+    expect = set(reference_walk(root))
+    assert bytes(root) + b"/kept/f.txt" in expect
+    assert bytes(root) + b"/kept/.snapshot/hidden.txt" not in expect
+
+    res = crawl(spark, CrawlConfig(dirs=[str(root)]))
+    assert {bytes(r.path) for r in res.files.collect()} == expect
+    register_fsmeta(spark)
+    rows = spark.read.format("fsmeta").load(str(root)).collect()
+    assert {bytes(r.path) for r in rows} == expect
+
+
+def test_split_ships_directories_only(tmp_path):
+    """The driver's split lists names only and ships directory paths: every
+    item is a root or a real directory, the roots come first as their own
+    row, and with room to expand the leaves end up as deep items."""
+    import stat as stat_mod
+
+    from storage_crawler_spark.crawl.walker import split
+
+    root = tmp_path / "s"
+    for i in range(3):
+        (root / f"d{i}" / "sub").mkdir(parents=True)
+        (root / f"d{i}" / "f.txt").write_text("f")
+    (root / "top.txt").write_text("t")
+    (root / ".snapshot").mkdir()
+    items = split([bytes(root)], frozenset({b".snapshot"}), target=2)
+    assert items[0] == (bytes(root), None, 0)
+    for path, _, _ in items[1:]:
+        assert stat_mod.S_ISDIR(os.lstat(path).st_mode), path
+    # root expanded (3 dirs >= target 2): its dirs are left as deep items
+    assert (bytes(root), False, 0) in items
+    assert {p for p, deep, _ in items if deep} == {bytes(root) + b"/d%d" % i for i in range(3)}
+    # a target above the tree's dir count expands everything on the driver
+    items = split([bytes(root)], frozenset({b".snapshot"}), target=100)
+    assert not any(deep for _, deep, _ in items)
+    assert len([p for p, deep, _ in items if deep is False]) == 7

@@ -123,3 +123,24 @@ def test_in_place_rewrite_is_read_with_new_schema(spark, tmp_path):
     assert spark.table("documents").columns == cols + ["extra"]
     assert [tuple(r[c] for c in cols) for r in after] == [tuple(r) for r in before]
     assert all(r["extra"] == 2 * r["doc_id"] for r in after)
+
+
+def test_column_max_from_footers(tmp_path):
+    """The largest ``id`` over a table's row groups comes from footer
+    statistics; 0-row files are skipped, and a row group with rows but no
+    ``id`` statistics raises rather than return a partial maximum."""
+    table = tmp_path / "t"
+    table.mkdir()
+    pq.write_table(pa.table({"id": [3, 9]}), str(table / "part-0.parquet"))
+    pq.write_table(pa.table({"id": [12, 4]}), str(table / "part-1.parquet"), row_group_size=1)
+    pq.write_table(pa.table({"id": pa.array([], pa.int64())}), str(table / "part-2.parquet"))
+    assert V.parquet_column_max(str(table), "id") == 12
+
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    pq.write_table(pa.table({"id": pa.array([], pa.int64())}), str(empty / "part-0.parquet"))
+    assert V.parquet_column_max(str(empty), "id") is None
+
+    pq.write_table(pa.table({"id": [99]}), str(table / "part-3.parquet"), write_statistics=False)
+    with pytest.raises(V.MissingColumnStats):
+        V.parquet_column_max(str(table), "id")

@@ -6,6 +6,7 @@ test_registry_window's existing single-window contract)."""
 from __future__ import annotations
 
 import pytest
+from crawl_reference import reference_walk
 
 
 # ---------------------------------------------------------------------------
@@ -235,9 +236,8 @@ def test_readability_mean_on_lattice():
 
 
 # ---------------------------------------------------------------------------
-# r14 deep-chain descent: chain-shaped frontiers batch levels in-task
-# (walker.scan_frontier_batches levels_per_job / DIR_BUDGET) — semantics
-# must be identical to strict per-level BFS.
+# Deep and funnel-shaped trees: the crawl's split-and-walk must match an
+# independent level-by-level reference walk (tests/crawl_reference.py).
 # ---------------------------------------------------------------------------
 
 
@@ -268,13 +268,15 @@ def test_deep_chain_crawl_matches_bfs(spark, tmp_path):
     assert len(deep_paths) == 301
     assert deep.summary["files"] == 301
 
-    bfs = crawl(spark, CrawlConfig(dirs=[str(root)], deep_batch_levels=1))
-    assert {bytes(r.path) for r in bfs.files.collect()} == deep_paths
+    bfs = reference_walk(root)
+    assert deep_paths == set(bfs)
+    # f149.txt, inside the 150th dir, is the deepest entry
+    assert deep.summary["depth"] == max(level for _, level in bfs.values()) == 151
 
 
 def test_deep_chain_exclusion_still_gates_descent(spark, tmp_path):
-    """An excluded dir name inside an in-task-descended chain must be
-    emitted but NOT descended — same contract as the BFS path."""
+    """An excluded dir name inside a chain must be emitted but NOT
+    descended."""
     from storage_crawler_spark.config import CrawlConfig
     from storage_crawler_spark.crawl import crawl
 
@@ -297,7 +299,8 @@ def test_deep_chain_exclusion_still_gates_descent(spark, tmp_path):
 
 def test_deep_chain_widening_hands_fanout_back(spark, tmp_path):
     """A chain that fans out wide below must still be fully crawled: the
-    DIR_BUDGET routes the fan-out back through the driver frontier."""
+    driver's split follows the chain down and hands the fan-out to the
+    tasks."""
     import os
 
     from storage_crawler_spark.config import CrawlConfig
@@ -306,7 +309,7 @@ def test_deep_chain_widening_hands_fanout_back(spark, tmp_path):
     root = tmp_path / "funnel"
     root.mkdir()
     tip = _make_chain(root, 12)
-    for i in range(600):  # fan-out well past walker.DIR_BUDGET=256
+    for i in range(600):  # fan-out well past the split target
         d = os.path.join(tip, f"w{i:03d}")
         os.mkdir(d)
         with open(os.path.join(d, "leaf.dat"), "wb") as fh:
@@ -316,3 +319,4 @@ def test_deep_chain_widening_hands_fanout_back(spark, tmp_path):
     paths = {bytes(r.path) for r in res.files.collect()}
     # root + 12*(dir+file) + 600 wide dirs + 600 leaves
     assert len(paths) == 1 + 24 + 1200
+    assert paths == set(reference_walk(root))

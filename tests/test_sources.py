@@ -75,6 +75,30 @@ def test_lake_append_status(spark, small_tree, tmp_path):
     assert brief == sorted(tuple(r) for r in status_brief(result.status).collect())
 
 
+def test_append_status_reads_ids_from_footers(spark, tmp_path):
+    """Appending to an existing tag continues its ids with the largest id
+    read from the parquet footers: the append runs only its write job."""
+    import uuid
+
+    from storage_crawler_spark.crawl.pipeline import status_rows
+    from storage_crawler_spark.sources.lake import append_status
+
+    lake_root = str(tmp_path / "lake")
+    events = [(1.0, "begin", None, "event"), (2.0, "end", None, "event")]
+    append_status(status_rows(spark, events), lake_root, "ft")
+    sc = spark.sparkContext
+    group = f"append-{uuid.uuid4().hex}"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        append_status(status_rows(spark, events), lake_root, "ft")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1  # the write
+    ids = sorted(r.id for r in read_status(spark, lake_root, "ft").collect())
+    assert ids == [0, 1, 2, 3]
+
+
 def test_jdbc_ddl_parity():
     ddl = files_table_ddl("mytag")
     assert ddl.startswith("CREATE TABLE storcrawl_mytag.files")

@@ -183,10 +183,30 @@ def test_incremental_crawl_epochs(spark, tmp_path):
     assert spark.read.parquet(f"{lake}/storcrawl_inc/files").count() == 3
 
 
+def test_incremental_files_ids_continue_across_epochs(spark, tmp_path):
+    """Each epoch's ``files`` ids are shifted past the tag's largest id, so
+    two landing waves into one tag never share an id (each wave's first row
+    would otherwise get id 0)."""
+    from storage_crawler_spark.streaming import incremental_crawl
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    lake = str(tmp_path / "lake")
+    for i in range(2):
+        f = tmp_path / f"f{i}.txt"
+        f.write_text("x")
+        (landing / f"wave{i}.txt").write_text(f"{f}\n")
+        incremental_crawl(spark, str(landing), lake, tag="ids").awaitTermination()
+    ids = [r.id for r in spark.read.parquet(f"{lake}/storcrawl_ids/files").collect()]
+    assert len(ids) == 2 and len(set(ids)) == 2
+
+
 def test_stat_enrich_is_one_python_pass(spark, tmp_path):
     """lstat, extension and owner run in one mapInPandas kernel: the plan
     carries no pandas-UDF column (ArrowEvalPython) on top of it, and the
     files row builder over it gives FILES_SCHEMA's columns in order."""
+    import datetime
+
     from storage_crawler_spark.config import CrawlConfig
     from storage_crawler_spark.crawl.pipeline import files_rows
     from storage_crawler_spark.functions.owners import find_owner
@@ -199,7 +219,8 @@ def test_stat_enrich_is_one_python_pass(spark, tmp_path):
     paths = [str(f).encode(), str(tmp_path).encode() + b"/gone.txt"]
     owners = {str(tmp_path).encode(): "alice"}
     df = files_rows(
-        stat_enrich(spark.createDataFrame([(p,) for p in paths], "path BINARY"), CrawlConfig(), owners)
+        stat_enrich(spark.createDataFrame([(p,) for p in paths], "path BINARY"), CrawlConfig(), owners),
+        datetime.datetime.now(datetime.timezone.utc),
     )
 
     plan = df._jdf.queryExecution().executedPlan().toString()

@@ -15,9 +15,8 @@ For each registry entry this tool counts every ``DataFrame.persist`` the
 builder makes (through ``_persist_view`` or on a handle), builds the entry,
 and compares the persists still live at its return against
 InMemoryTableScan occurrences in the executed plan.  Entries that persist
-but never scan cache are the bug class; they print as LOST.  Build-scoped
-persists (``_scoped_persist_view``) are checked apart: they must be
-released before the builder returns.
+but never scan cache are the bug class; they print as LOST.  A persist the
+builder released before returning is build-scoped and not counted.
 """
 
 from __future__ import annotations
@@ -50,58 +49,37 @@ def main() -> int:
 
     persisted: list[DataFrame] = []
     checkpointed: list[str] = []
-    scoped: list[tuple[str, object]] = []
-    in_scoped = [0]
     real_df_persist = DataFrame.persist
     real_ckpt = registry._checkpoint_view
-    real_scoped = registry._scoped_persist_view
 
     def tracking_df_persist(self, *args, **kwargs):
-        if not in_scoped[0]:
-            persisted.append(self)
+        persisted.append(self)
         return real_df_persist(self, *args, **kwargs)
 
     def tracking_ckpt(df, name):
         checkpointed.append(name)
         return real_ckpt(df, name)
 
-    def tracking_scoped(df, name):
-        scoped.append((name, df))
-        in_scoped[0] += 1
-        try:
-            return real_scoped(df, name)
-        finally:
-            in_scoped[0] -= 1
-
     DataFrame.persist = tracking_df_persist
     registry._checkpoint_view = tracking_ckpt
-    registry._scoped_persist_view = tracking_scoped
 
     names = list(registry.QUERIES) if not args.only else args.only.split(",")
     lost, ok, nopersist, skipped = [], [], [], []
     for name in names:
         persisted.clear()
         checkpointed.clear()
-        scoped.clear()
         spec = registry.QUERIES[name]
         try:
             df = spec.builder(spark, args.sf)
             plan = df._jdf.queryExecution().executedPlan().toString()
-            # build-scoped persists (scoped_persist_view contract): the
-            # builder must have RELEASED them before returning — a still-
-            # cached one is a leak, checked BEFORE clearCache wipes state
-            leaked = [n for n, sdf in scoped if _cached(sdf)]
-            # a persist the builder released itself is build-scoped too
+            # a persist the builder released itself is build-scoped; read
+            # before clearCache wipes the state
             n_persist = sum(1 for pdf in persisted if _cached(pdf))
         except Exception as exc:  # noqa: BLE001
             skipped.append((name, str(exc).splitlines()[0][:100]))
             continue
         finally:
             spark.catalog.clearCache()
-        if leaked:
-            lost.append((name, len(leaked)))
-            print(f"LOST {name}: scoped persist(s) not released: {leaked}")
-            continue
         n_imts = plan.count("InMemoryTableScan")
         n_ckpt = len(checkpointed)
         n_rdd = plan.count("Scan ExistingRDD")

@@ -6,11 +6,10 @@ and report throughput in the reference's own metric vocabulary
 total data volume TB — reference storcrawl.py:503-505, :641 definitions;
 the reference publishes no values, so these are our self-anchor series).
 
-The rates are the crawl's own (``res.summary``, the status rows of
-crawl/pipeline.py): walk rate = files over the level loop, which walks and
-lstats in one fused pass (the Arrow-batch scandir walker); stat rate =
-files over the enrichment stage (extension, owner, mode bits), which stands
-where the reference's stater pool does.
+The rate is the crawl's own (``res.summary``, the status rows of
+crawl/pipeline.py): walk rate = files over the one walk job, which lists,
+lstats and enriches in one fused pass, so the crawl's stat rate is the
+same number and is not reported apart.
 
 Usage: python tools/bench_crawl.py [--tree DIR] [--out FILE]
 (default tree: the 100k-entry synthetic tree under .localdata/crawltree;
@@ -129,9 +128,7 @@ def main() -> int:
         "total_tb": res.summary.get("total_tb"),
         "crawl_sec": round(crawl_s, 2),
         "walk_sec": round(res.summary["walk_sec"], 2),
-        "stat_sec": round(res.summary["stat_sec"], 2),
         "file_walk_rate": round(res.summary["files"] / res.summary["walk_sec"], 1),
-        "file_stat_rate": round(res.summary["files"] / res.summary["stat_sec"], 1),
         "lake_write_sec": round(write_s, 2),
         "insert_rate": round(n_entries / write_s, 1),
         "report_rows": n_report,

@@ -9,9 +9,10 @@ missing datapoints beside it, in the reference's metric vocabulary
   paired hot re-run in the same session;
 - a 10k-DEEP chain (build: tools snippet in the r14 notes; 1-char dir
   names, created with relative mkdirs so the chain extends PAST the
-  PATH_MAX wall at ~level 2030): exercises the r14 in-task deep-descent
-  (deep_batch_levels) and the graceful ENAMETOOLONG wall — the crawl
-  must terminate and emit exactly the OS-reachable prefix;
+  PATH_MAX wall at ~level 2030): exercises the driver split, which follows
+  a chain level by level (up to ``walker.MAX_DRIVER_SCANS`` scandirs), and
+  the graceful ENAMETOOLONG wall — the crawl must terminate and emit
+  exactly the OS-reachable prefix;
 - a 100k-WIDE fan-out dir: one directory holding 100k files + 1k
   subdirs, the single-scandir-stream skew case.
 
@@ -103,7 +104,7 @@ def main() -> int:
             "parity": n == ref + 1,  # + the root row
             "crawl_sec": round(dt, 2),
             "walk_rate": round(n / dt, 1),
-            "depth_levels_consumed": summary["depth"],
+            "depth": summary["depth"],
             "note": "chain extends past PATH_MAX; crawl must wall "
             "gracefully at the same entry the reference walk does",
         }
